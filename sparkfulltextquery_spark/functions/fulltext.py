@@ -250,9 +250,9 @@ BM25F_W_BODY = 1.0
 def field_pos_pred(field: str):
     """Element predicate for the positional title/body carving (title =
     first BM25F_TITLE_LEN tokens): the ONE definition of field membership
-    over a position value, shared by the inline, indexed-one-pass, and
-    pure-negation query compilers (use with F.exists over stored position
-    arrays, or apply to a position Column directly). Changing the carving
+    over a position value, shared by the query compiler and the inline
+    field matchers (use with F.exists over stored position arrays, or
+    apply to a position Column directly). Changing the carving
     here changes it everywhere at once."""
     if field == "title":
         return lambda p: p < F.lit(BM25F_TITLE_LEN)
@@ -613,24 +613,40 @@ def sloppy_phrase_match(
     )
 
 
+def reduce_and(conds):
+    """AND-fold a non-empty list of Columns (single-word phrases fold to
+    the always-true literal: every occurrence of the word is a match)."""
+    if not conds:
+        return F.lit(True)
+    out = conds[0]
+    for c in conds[1:]:
+        out = out & c
+    return out
+
+
 def exact_starts_expr(arr_of: dict, terms: list[str]):
     """Column: start positions of the exact consecutive phrase, given each
     term's per-doc position array — the array_contains chain shared by the
     inline and indexed phrase paths."""
     if len(terms) == 1:
         return arr_of[terms[0]]
-    conds = lambda p: [  # noqa: E731
-        F.array_contains(arr_of[t], p + F.lit(i))
-        for i, t in enumerate(terms[1:], start=1)
-    ]
+    return F.filter(
+        arr_of[terms[0]],
+        lambda p: reduce_and(
+            [
+                F.array_contains(arr_of[t], p + F.lit(i))
+                for i, t in enumerate(terms[1:], start=1)
+            ]
+        ),
+    )
 
-    def _and(cs):
-        out = cs[0]
-        for c in cs[1:]:
-            out = out & c
-        return out
 
-    return F.filter(arr_of[terms[0]], lambda p: _and(conds(p)))
+def field_start_pred(field: str, n: int):
+    """Element predicate on the START position of an ``n``-token phrase
+    that lies entirely inside the field (same carving as field_pos_pred)."""
+    if field == "title":
+        return lambda p: p <= F.lit(BM25F_TITLE_LEN - n)
+    return lambda p: p >= F.lit(BM25F_TITLE_LEN)
 
 
 def field_phrase_match(
@@ -656,14 +672,9 @@ def field_phrase_match(
         pos = positional_relation(docs, id_col, text_col)
     uniq = sorted(set(terms))
     slots, arr_of = _gather_position_slots(pos, uniq)
-    starts = exact_starts_expr(arr_of, terms)
-    n = len(terms)
-    in_field = (
-        (lambda p: p <= F.lit(BM25F_TITLE_LEN - n))
-        if field == "title"
-        else (lambda p: p >= F.lit(BM25F_TITLE_LEN))
+    bounded = F.filter(
+        exact_starts_expr(arr_of, terms), field_start_pred(field, len(terms))
     )
-    bounded = F.filter(starts, in_field)
     return (
         slots.select("doc_id", F.size(bounded).alias("n_starts"))
         .filter(F.col("n_starts") > 0)

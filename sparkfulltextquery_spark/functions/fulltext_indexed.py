@@ -377,7 +377,7 @@ def fulltext_prefix_search_indexed(spark: SparkSession, sf_dir: str) -> DataFram
     # a divergence, not a safety win (the bounded two-pass protocol still
     # bounds driver transfer to the actual match count)
     ts = resolve_expansions(
-        spark, prefix, prefixes=["quer"], max_expansions=1_000_000
+        spark, prefix, {("prefix", "quer")}, max_expansions=1_000_000
     )[("prefix", "quer")]
     post = spark.table(f"{prefix}_postings").filter(
         F.col("term").isin(ts) if ts else F.lit(False)

@@ -13,9 +13,14 @@ table plus broadcast stats — independent of corpus size.
 
 from __future__ import annotations
 
+import threading
+import uuid
+from collections import OrderedDict
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sparkfulltextquery_spark.functions import querylang as QL
 from sparkfulltextquery_spark.functions.fulltext import (
     BM25_B,
     BM25_K1,
@@ -23,6 +28,13 @@ from sparkfulltextquery_spark.functions.fulltext import (
     corpus_stats,
     doc_lengths,
     positional_postings,
+    reduce_and,
+)
+from sparkfulltextquery_spark.functions.index_expand import (
+    MAX_EXPANSIONS,
+    collect_expansion_keys,
+    resolve_expansions,
+    resolve_expansions_over,  # noqa: F401  (re-exported)
 )
 
 
@@ -99,8 +111,7 @@ def build_index(
     _INDEX_DF_CACHE.pop(skey, None)
     for ck in [k for k in _FIELD_STATS_CACHE if k[:2] == skey]:
         _FIELD_STATS_CACHE.pop(ck, None)
-    for ck in [k for k in _COMPILED_QUERY_CACHE if k[:2] == skey]:
-        _COMPILED_QUERY_CACHE.pop(ck, None)
+    _drop_compiled_queries(skey)
     names = {
         "postings": f"{table_prefix}_postings",
         "doc_freq": f"{table_prefix}_df",
@@ -161,8 +172,6 @@ def build_index(
     # generation stamp: unique per build, read back by refresh_index_caches
     # so an externally-rebuilt index can be detected and this process's
     # literal/plan caches dropped (ADVICE r05)
-    import uuid
-
     writer(
         corpus_stats(docs, id_col, text_col).withColumn(
             "generation", F.lit(uuid.uuid4().hex)
@@ -242,8 +251,7 @@ def refresh_index_caches(spark: SparkSession, table_prefix: str = "sftq_index") 
     for ck in [k for k in _FIELD_STATS_CACHE if k[:2] == skey]:
         _FIELD_STATS_CACHE.pop(ck, None)
     _INDEX_GEN_CACHE[skey] = current
-    for ck in [k for k in _COMPILED_QUERY_CACHE if k[:2] == skey]:
-        _COMPILED_QUERY_CACHE.pop(ck, None)
+    _drop_compiled_queries(skey)
     return True
 
 
@@ -280,6 +288,57 @@ def _df_stats_literals(
     return n_docs, avgdl, {t: dfc[t] for t in terms}
 
 
+def _idf_case(terms, n_docs: int, df_of: dict, boosts: dict | None = None):
+    """BM25 idf per posting row as a CASE over the term column, one branch
+    per term with df/n_docs as literals (Catalyst constant-folds each
+    F.log); with ``boosts``, every branch is scaled by the term's boost."""
+    idf = F.lit(None).cast("double")
+    for t in terms:
+        e = F.log(
+            F.lit(1.0)
+            + (F.lit(n_docs) - F.lit(df_of[t]) + F.lit(0.5))
+            / (F.lit(df_of[t]) + F.lit(0.5))
+        )
+        if boosts is not None:
+            e = F.lit(float(boosts.get(t, 1.0))) * e
+        idf = F.when(F.col("term") == t, e).otherwise(idf)
+    return idf
+
+
+def _bm25_tf(idf, tf, dl, avgdl: float, k1: float, b: float):
+    """One term's BM25 contribution: idf times the saturated,
+    length-normalized tf."""
+    return (
+        idf
+        * (tf * (k1 + 1))
+        / (tf + F.lit(k1) * (F.lit(1 - b) + F.lit(b) * dl / F.lit(avgdl)))
+    )
+
+
+def _bm25_sum(
+    spark: SparkSession,
+    table_prefix: str,
+    terms: list[str],
+    boosts: dict | None = None,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+):
+    """Per-doc BM25 score aggregate over a posting scan: the 4dp-rounded
+    sum of ``terms``' contributions (other scanned rows add 0)."""
+    n_docs, avgdl, df_of = _df_stats_literals(spark, table_prefix, terms)
+    tscore = _bm25_tf(
+        _idf_case(terms, n_docs, df_of, boosts), F.col("tf"), F.col("dl"), avgdl, k1, b
+    )
+    return F.round(
+        F.sum(
+            F.when(
+                F.col("term").isin(terms) if terms else F.lit(False), tscore
+            ).otherwise(F.lit(0.0))
+        ),
+        4,
+    ).alias("score")
+
+
 def bm25_scores_indexed(
     spark: SparkSession,
     query: str,
@@ -302,18 +361,7 @@ def bm25_scores_indexed(
         raise ValueError("empty query after tokenization")
     n_docs, avgdl, df_of = _df_stats_literals(spark, table_prefix, q_terms)
     post = spark.table(f"{table_prefix}_postings").filter(F.col("term").isin(q_terms))
-    # idf per term as a constant-folded JVM expression over the literal df
-    idf_expr = F.lit(None).cast("double")
-    for t in q_terms:
-        idf_expr = F.when(
-            F.col("term") == t,
-            F.lit(float((boosts or {}).get(t, 1.0)))
-            * F.log(
-                F.lit(1.0)
-                + (F.lit(n_docs) - F.lit(df_of[t]) + F.lit(0.5))
-                / (F.lit(df_of[t]) + F.lit(0.5))
-            ),
-        ).otherwise(idf_expr)
+    idf_expr = _idf_case(q_terms, n_docs, df_of, boosts or {})
     # per-term df as a constant-folded CASE (used by the explain surface;
     # constant-folds away when unprojected)
     df_expr = F.lit(None).cast("long")
@@ -323,13 +371,7 @@ def bm25_scores_indexed(
         post.withColumn("idf", idf_expr)
         .withColumn("df", df_expr)
         .withColumn(
-            "tscore",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (
-                F.col("tf")
-                + F.lit(k1) * (F.lit(1 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-            ),
+            "tscore", _bm25_tf(F.col("idf"), F.col("tf"), F.col("dl"), avgdl, k1, b)
         )
     )
     if explain:
@@ -464,30 +506,10 @@ def dismax_scores_indexed(
         spark, table_prefix, q_terms, title_len
     )
 
-    def idf_expr(field: str):
-        e = F.lit(None).cast("double")
-        for t in q_terms:
-            dfv = df_of[(field, t)]
-            e = F.when(
-                F.col("term") == t,
-                F.log(
-                    F.lit(1.0)
-                    + (F.lit(n_docs) - F.lit(dfv) + F.lit(0.5))
-                    / (F.lit(dfv) + F.lit(0.5))
-                ),
-            ).otherwise(e)
-        return e
-
     def field_score(field: str, tf_col, dl_col):
+        idf = _idf_case(q_terms, n_docs, {t: df_of[(field, t)] for t in q_terms})
         return F.when(
-            tf_col > 0,
-            idf_expr(field)
-            * (tf_col * (k1 + 1))
-            / (
-                tf_col
-                + F.lit(k1)
-                * (F.lit(1 - b) + F.lit(b) * dl_col / F.lit(avgdl_of[field]))
-            ),
+            tf_col > 0, _bm25_tf(idf, tf_col, dl_col, avgdl_of[field], k1, b)
         )
 
     post = spark.table(f"{table_prefix}_postings").filter(
@@ -594,17 +616,6 @@ def phrase_match_indexed(
     )
 
 
-def reduce_and(conds):
-    """AND-fold a non-empty list of Columns (single-word phrases fold to
-    the always-true literal: every occurrence of the word is a match)."""
-    if not conds:
-        return F.lit(True)
-    out = conds[0]
-    for c in conds[1:]:
-        out = out & c
-    return out
-
-
 def proximity_match_indexed(
     spark: SparkSession,
     term_a: str,
@@ -670,16 +681,17 @@ def suggest_terms(
     )
 
 
-# r8 file-size split: expansion-atom dictionary resolution lives in
-# index_expand; imported here (and re-exported) so callers keep working
-from sparkfulltextquery_spark.functions.index_expand import (  # noqa: E402
-    MAX_EXPANSIONS,
-    resolve_expansions,
-    resolve_expansions_over,
-)
+#: Most compiled search plans kept per process; the least recently used
+#: is dropped first.
+_COMPILED_QUERY_CACHE_SIZE = 256
+_COMPILED_QUERY_CACHE: OrderedDict = OrderedDict()
+_COMPILED_QUERY_LOCK = threading.Lock()
 
 
-_COMPILED_QUERY_CACHE: dict = {}
+def _drop_compiled_queries(skey) -> None:
+    with _COMPILED_QUERY_LOCK:
+        for ck in [k for k in _COMPILED_QUERY_CACHE if k[:2] == skey]:
+            del _COMPILED_QUERY_CACHE[ck]
 
 
 def search_indexed(
@@ -690,39 +702,42 @@ def search_indexed(
     max_expansions: int = MAX_EXPANSIONS,
 ) -> DataFrame:
     """Boolean query language (querylang grammar) evaluated entirely off the
-    persisted index — as ONE pass when the query isn't pure negation:
+    persisted index by querylang.compile_per_doc, the compiler inline
+    search runs too:
 
-        pruned scan (every atom + ranking term's buckets, one
-        SelectedBucketsCount read) → broadcast df/stats joins → a single
-        groupBy(doc_id) computing term flags, phrase-slot position arrays,
-        AND the BM25 score together → boolean-expression filter → top-k heap.
+        expansion atoms resolved against the term dictionary → ONE
+        bucket-pruned scan (SelectedBucketsCount) of every atom term → a
+        single groupBy(doc_id) computing atom flags, phrase-slot position
+        arrays AND the BM25 sum (df/n_docs/avgdl as driver literals) →
+        boolean-expression filter → top-k heap.
 
-    No matched⋈scored join, no per-atom scan, no phrase explode — the
-    whole search is scan + agg + heap, all joins broadcast (r04; the r03
-    form ran one scan + semi/anti/union join per atom plus a separate BM25
-    subtree). Pure-negation queries (satisfiable by a doc with no query
-    term) still take compile_matches with the doc-length universe.
+    No joins, except for pure negation (a query a doc holding none of its
+    atoms satisfies, e.g. ``NOT x``): the per-doc rows then LEFT JOIN onto
+    the doc universe (``{table_prefix}_dl``) with flags and score 0 —
+    one join.
 
-    r05: compiled plans are cached per (application, index, query text, k)
-    — the prepared-statement discipline every query engine applies (the
-    reference's own session catalogs cache resolved plans). Building the
-    flag/slot/idf expression tree costs ~0.2s of driver-side column
-    construction; a repeated query (the common production case — the same
-    search template with the same text) pays it once. The cache is
-    workload-bounded (distinct query strings) and invalidated with the
-    stats caches on build_index.
+    Compiled plans are cached per (application, index, query text, k,
+    max_expansions) in a _COMPILED_QUERY_CACHE_SIZE-entry LRU, invalidated
+    with the stats caches by build_index: building the expression tree
+    costs driver time a repeated query pays once.
 
     Concurrency contract (ADVICE r05): cached literals and plans assume a
     single writer in this process. If another process rebuilds the index at
     the same path, call ``refresh_index_caches(spark, table_prefix)`` —
     it compares the persisted generation stamp and drops stale caches."""
     ckey = (spark.sparkContext.applicationId, table_prefix, query, k, max_expansions)
-    cached = _COMPILED_QUERY_CACHE.get(ckey)
+    with _COMPILED_QUERY_LOCK:
+        cached = _COMPILED_QUERY_CACHE.get(ckey)
+        if cached is not None:
+            _COMPILED_QUERY_CACHE.move_to_end(ckey)
     if cached is not None:
         _force_bucketed_scan(spark)
         return cached
     df = _search_indexed_build(spark, query, k, table_prefix, max_expansions)
-    _COMPILED_QUERY_CACHE[ckey] = df
+    with _COMPILED_QUERY_LOCK:
+        _COMPILED_QUERY_CACHE[ckey] = df
+        if len(_COMPILED_QUERY_CACHE) > _COMPILED_QUERY_CACHE_SIZE:
+            _COMPILED_QUERY_CACHE.popitem(last=False)
     return df
 
 
@@ -734,502 +749,21 @@ def _search_indexed_build(
     max_expansions: int = MAX_EXPANSIONS,
 ) -> DataFrame:
     _force_bucketed_scan(spark)
-    from sparkfulltextquery_spark.functions import querylang as QL
-
     ast = QL.parse_query(query)
-    post = spark.table(f"{table_prefix}_postings")
-    pos = sorted(set(QL.positive_terms(ast)))
-
-    terms, phrases, prefixes = QL._collect_atoms(ast)
-    nears = sorted(QL.collect_nears(ast))
-    fields = sorted(QL.collect_fields(ast))
-    fuzzies = sorted(QL.collect_fuzzies(ast))
-    ranges = sorted(QL.collect_ranges(ast))
-    regexes = sorted(QL.collect_regexes(ast))
-    wildcards = sorted(QL.collect_wildcards(ast))
-    fphrases = sorted(QL.collect_fieldphrases(ast))
-    fprefixes = sorted(QL.collect_fieldprefixes(ast))
-    ffuzzies = sorted(QL.collect_fieldfuzzies(ast))
-    franges = sorted(QL.collect_fieldranges(ast))
-    fwilds = sorted(QL.collect_fieldwildcards(ast))
-    ppfxs = sorted(QL.collect_phraseprefixes(ast))
-
-    # expansion atoms resolve against the persisted term DICTIONARY first
-    # (VERDICT r07 #1; Lucene MultiTermQuery rewrites to concrete term
-    # disjunctions before the index is consulted) — the matched terms fold
-    # into the equality isin below, so the posting scan stays bucket-pruned
-    # and equality-only; no LIKE/levenshtein/RLIKE/StartsWith ever touches
-    # the postings relation. Field scoping never affects term-level
-    # matching (the field carve applies to stored positions at flag time),
-    # so field-scoped atoms share their plain atom's resolution.
     expansion = resolve_expansions(
-        spark,
-        table_prefix,
-        prefixes=set(prefixes)
-        | {w for _f, w in fprefixes}
-        | {ppx for _lead, ppx in ppfxs},
-        fuzzies=set(fuzzies) | {(zt, zd) for _f, zt, zd in ffuzzies},
-        ranges=set(ranges) | {(lo, hi) for _f, lo, hi in franges},
-        regexes=set(regexes),
-        wildcards=set(wildcards) | {w for _f, w in fwilds},
-        max_expansions=max_expansions,
+        spark, table_prefix, collect_expansion_keys(ast), max_expansions
     )
-
-    def exp_terms(kind: str, key) -> list:
-        return expansion.get((kind, key), [])
-
-    def exp_isin(kind: str, key):
-        ts = exp_terms(kind, key)
-        return F.col("term").isin(ts) if ts else F.lit(False)
-
-    if QL._eval_empty(ast):
-        # pure negation: needs the universe; rare, cold path
-        phrase_fn = lambda text, slop=0: phrase_match_indexed(  # noqa: E731
-            spark, text, table_prefix, slop=slop
-        ).select("doc_id")
-        near_fn = lambda a, b, k: proximity_match_indexed(  # noqa: E731
-            spark, a, b, k, table_prefix
-        ).select("doc_id")
-
-        def field_fn(field: str, term: str):
-            # field membership from the stored position arrays — same
-            # title carving as bm25f_search (first BM25F_TITLE_LEN tokens)
-            from sparkfulltextquery_spark.functions.fulltext import field_pos_pred
-
-            pos_pred = field_pos_pred(field)
-            return (
-                post.filter(F.col("term") == term)
-                .filter(F.exists(F.col("positions"), pos_pred))
-                .select("doc_id")
-            )
-
-        def fphrase_fn(field: str, text: str):
-            from sparkfulltextquery_spark.functions.fulltext import (
-                BM25F_TITLE_LEN,
-                exact_starts_expr,
-            )
-
-            terms = _py_tokenize(text)
-            uniq = sorted(set(terms))
-            slots = (
-                post.filter(F.col("term").isin(uniq))
-                .groupBy("doc_id")
-                .agg(
-                    *[
-                        F.max(
-                            F.when(F.col("term") == t, F.col("positions"))
-                        ).alias(f"_fp_{i}")
-                        for i, t in enumerate(uniq)
-                    ]
-                )
-            )
-            arr_of = {t: F.col(f"_fp_{i}") for i, t in enumerate(uniq)}
-            for t in uniq:
-                slots = slots.filter(arr_of[t].isNotNull())
-            n = len(terms)
-            in_field = (
-                (lambda p: p <= F.lit(BM25F_TITLE_LEN - n))
-                if field == "title"
-                else (lambda p: p >= F.lit(BM25F_TITLE_LEN))
-            )
-            starts = F.filter(exact_starts_expr(arr_of, terms), in_field)
-            return slots.filter(F.size(starts) > 0).select("doc_id")
-
-        # field-scoped expansion fns share the plain atom's dictionary
-        # resolution — the posting filter is the resolved equality isin,
-        # the field carve applies to stored positions
-        def fprefix_fn(field: str, prefix: str):
-            from sparkfulltextquery_spark.functions.fulltext import field_pos_pred
-
-            pos_pred = field_pos_pred(field)
-            return (
-                post.filter(exp_isin("prefix", prefix))
-                .filter(F.exists(F.col("positions"), pos_pred))
-                .select("doc_id")
-                .distinct()
-            )
-
-        def ffuzzy_fn(field: str, text: str, dist: int):
-            from sparkfulltextquery_spark.functions.fulltext import field_pos_pred
-
-            pos_pred = field_pos_pred(field)
-            return (
-                post.filter(exp_isin("fuzzy", (text, dist)))
-                .filter(F.exists(F.col("positions"), pos_pred))
-                .select("doc_id")
-                .distinct()
-            )
-
-        def frange_fn(field: str, lo: str, hi: str):
-            from sparkfulltextquery_spark.functions.fulltext import field_pos_pred
-
-            pos_pred = field_pos_pred(field)
-            return (
-                post.filter(exp_isin("range", (lo, hi)))
-                .filter(F.exists(F.col("positions"), pos_pred))
-                .select("doc_id")
-                .distinct()
-            )
-
-        def fwild_fn(field: str, pattern: str):
-            from sparkfulltextquery_spark.functions.fulltext import field_pos_pred
-
-            pos_pred = field_pos_pred(field)
-            return (
-                post.filter(exp_isin("wild", pattern))
-                .filter(F.exists(F.col("positions"), pos_pred))
-                .select("doc_id")
-                .distinct()
-            )
-
-        def ppfx_fn(text: str, prefix: str):
-            from sparkfulltextquery_spark.functions.fulltext import (
-                exact_starts_expr,
-            )
-
-            exact = _py_tokenize(text)
-            uniq = sorted(set(exact))
-            slots = (
-                post.filter(
-                    F.col("term").isin(
-                        sorted(set(uniq) | set(exp_terms("prefix", prefix)))
-                    )
-                )
-                .groupBy("doc_id")
-                .agg(
-                    *[
-                        F.max(F.when(F.col("term") == t, F.col("positions"))).alias(
-                            f"_e{i}"
-                        )
-                        for i, t in enumerate(uniq)
-                    ],
-                    F.flatten(
-                        F.collect_list(
-                            F.when(exp_isin("prefix", prefix), F.col("positions"))
-                        )
-                    ).alias("_pp"),
-                )
-            )
-            arr_of = {t: F.col(f"_e{i}") for i, t in enumerate(uniq)}
-            for t in uniq:
-                slots = slots.filter(arr_of[t].isNotNull())
-            n_lead = len(exact)
-            starts = F.filter(
-                exact_starts_expr(arr_of, exact),
-                lambda pp: F.exists(F.col("_pp"), lambda q: q == pp + F.lit(n_lead)),
-            )
-            return slots.filter(F.size(starts) > 0).select("doc_id")
-
-        def term_resolver(node):
-            # plain expansion atoms resolve through the same dictionary
-            # lists as the one-pass path — equality-only posting filters
-            if isinstance(node, QL.Prefix):
-                return exp_terms("prefix", node.text)
-            if isinstance(node, QL.Fuzzy):
-                return exp_terms("fuzzy", (node.text, node.dist))
-            if isinstance(node, QL.TermRange):
-                return exp_terms("range", (node.lo, node.hi))
-            if isinstance(node, QL.Regex):
-                return exp_terms("regex", node.pattern)
-            if isinstance(node, QL.Wildcard):
-                return exp_terms("wild", node.pattern)
-            return None
-
-        universe = spark.table(f"{table_prefix}_dl").select("doc_id")
-        matched = QL.compile_matches(
-            ast, post, phrase_fn=phrase_fn, universe=universe, near_fn=near_fn,
-            field_fn=field_fn, fphrase_fn=fphrase_fn, fprefix_fn=fprefix_fn,
-            ffuzzy_fn=ffuzzy_fn, frange_fn=frange_fn, fwild_fn=fwild_fn,
-            ppfx_fn=ppfx_fn, term_resolver=term_resolver,
-        )
-        if not pos:
-            return (
-                matched.select("doc_id", F.lit(0.0).alias("score"))
-                .orderBy("doc_id")
-                .limit(k)
-            )
-        scored = bm25_scores_indexed(
-            spark, " ".join(pos), table_prefix, boosts=QL.term_boosts(ast)
-        )
-        return (
-            matched.join(scored, "doc_id", "left")
-            .select("doc_id", F.coalesce(F.col("score"), F.lit(0.0)).alias("score"))
-            .orderBy(F.col("score").desc(), F.col("doc_id"))
-            .limit(k)
-        )
-
-    ppfx_toks = {pp: _py_tokenize(pp[0]) for pp in ppfxs}
-    ppfx_terms = {t for ts in ppfx_toks.values() for t in ts}
-    near_terms = {t for (a, b, _k) in nears for t in (a, b)}
-    field_terms = {t for (_f, t) in fields}
-    fphrase_toks = {fp: _py_tokenize(fp[1]) for fp in fphrases}
-    fphrase_terms = {t for ts in fphrase_toks.values() for t in ts}
-    phrase_toks = {p: _py_tokenize(p[0]) for p in sorted(phrases)}
-    all_terms = sorted(
-        terms
-        | {t for ts in phrase_toks.values() for t in ts}
-        | near_terms
-        | field_terms
-        | fphrase_terms
-        | ppfx_terms
-        | set(pos)
+    score = _bm25_sum(
+        spark, table_prefix, sorted(set(QL.positive_terms(ast))), QL.term_boosts(ast)
     )
-    flag = {t: f"_t{i}" for i, t in enumerate(sorted(terms))}
-    wflag = {w: f"_w{i}" for i, w in enumerate(sorted(prefixes))}
-    zflag = {z: f"_z{i}" for i, z in enumerate(fuzzies)}
-    rflag = {r: f"_r{i}" for i, r in enumerate(ranges)}
-    xflag = {x: f"_x{i}" for i, x in enumerate(regexes)}
-    vflag = {v: f"_v{i}" for i, v in enumerate(wildcards)}
-    fpxflag = {f: f"_fx{i}" for i, f in enumerate(fprefixes)}
-    ffzflag = {f: f"_fz{i}" for i, f in enumerate(ffuzzies)}
-    frgflag = {f: f"_fr{i}" for i, f in enumerate(franges)}
-    fwdflag = {f: f"_fw{i}" for i, f in enumerate(fwilds)}
-    ppslot = {pp: f"_px{i}" for i, pp in enumerate(ppfxs)}
-    slot = {
-        t: f"_s{i}"
-        for i, t in enumerate(
-            sorted(
-                {t for ts in phrase_toks.values() for t in ts}
-                | near_terms
-                | field_terms
-                | fphrase_terms
-                | ppfx_terms
-            )
-        )
-    }
-
-    # every atom — exact AND expansion — reduces to concrete vocabulary
-    # terms, so the scan filter is ONE equality isin: bucket-prunable
-    # (SelectedBucketsCount), no per-posting LIKE/levenshtein (VERDICT
-    # r07 #1 — expansions were OR'd predicates over the postings here)
-    scan_terms = sorted(
-        set(all_terms) | {t for ts in expansion.values() for t in ts}
-    )
-    pred = F.col("term").isin(scan_terms) if scan_terms else F.lit(False)
-    pruned = post.filter(pred)
-    # df/n_docs/avgdl as driver literals — no broadcast joins in the plan;
-    # `term^N` boosts fold into the idf literal chain
-    boosts = QL.term_boosts(ast)
-    n_docs, avgdl, df_of = _df_stats_literals(spark, table_prefix, pos)
-    idf_expr = F.lit(None).cast("double")
-    for t in pos:
-        idf_expr = F.when(
-            F.col("term") == t,
-            F.lit(float(boosts.get(t, 1.0)))
-            * F.log(
-                F.lit(1.0)
-                + (F.lit(n_docs) - F.lit(df_of[t]) + F.lit(0.5))
-                / (F.lit(df_of[t]) + F.lit(0.5))
-            ),
-        ).otherwise(idf_expr)
-    tscore = F.when(
-        F.col("term").isin(pos) if pos else F.lit(False),
-        idf_expr
-        * (F.col("tf") * (BM25_K1 + 1))
-        / (
-            F.col("tf")
-            + F.lit(BM25_K1)
-            * (F.lit(1 - BM25_B) + F.lit(BM25_B) * F.col("dl") / F.lit(avgdl))
-        ),
-    ).otherwise(F.lit(0.0))
-
-    aggs = [F.round(F.sum(tscore), 4).alias("score")]
-    aggs += [
-        F.max(F.when(F.col("term") == t, 1).otherwise(0)).alias(c)
-        for t, c in flag.items()
-    ]
-    aggs += [
-        F.max(F.when(exp_isin("prefix", w), 1).otherwise(0)).alias(c)
-        for w, c in wflag.items()
-    ]
-    aggs += [
-        F.max(F.when(exp_isin("fuzzy", (zt, zd)), 1).otherwise(0)).alias(c)
-        for (zt, zd), c in zflag.items()
-    ]
-    aggs += [
-        F.max(F.when(exp_isin("range", (lo, hi)), 1).otherwise(0)).alias(c)
-        for (lo, hi), c in rflag.items()
-    ]
-    aggs += [
-        F.max(F.when(exp_isin("regex", pat), 1).otherwise(0)).alias(c)
-        for pat, c in xflag.items()
-    ]
-    aggs += [
-        F.max(F.when(exp_isin("wild", pat), 1).otherwise(0)).alias(c)
-        for pat, c in vflag.items()
-    ]
-
-    def _fpx_pos_pred(field):
-        from sparkfulltextquery_spark.functions.fulltext import field_pos_pred
-
-        return field_pos_pred(field)
-
-    aggs += [
-        F.max(
-            F.when(
-                exp_isin("prefix", w)
-                & F.exists(F.col("positions"), _fpx_pos_pred(fld)),
-                1,
-            ).otherwise(0)
-        ).alias(c)
-        for (fld, w), c in fpxflag.items()
-    ]
-    aggs += [
-        F.max(
-            F.when(
-                exp_isin("fuzzy", (zt, zd))
-                & F.exists(F.col("positions"), _fpx_pos_pred(fld)),
-                1,
-            ).otherwise(0)
-        ).alias(c)
-        for (fld, zt, zd), c in ffzflag.items()
-    ]
-    aggs += [
-        F.max(
-            F.when(
-                exp_isin("range", (lo, hi))
-                & F.exists(F.col("positions"), _fpx_pos_pred(fld)),
-                1,
-            ).otherwise(0)
-        ).alias(c)
-        for (fld, lo, hi), c in frgflag.items()
-    ]
-    aggs += [
-        F.max(
-            F.when(
-                exp_isin("wild", w)
-                & F.exists(F.col("positions"), _fpx_pos_pred(fld)),
-                1,
-            ).otherwise(0)
-        ).alias(c)
-        for (fld, w), c in fwdflag.items()
-    ]
-    aggs += [
-        F.max(F.when(F.col("term") == t, F.col("positions"))).alias(c)
-        for t, c in slot.items()
-    ]
-    aggs += [
-        F.flatten(
-            F.collect_list(
-                F.when(exp_isin("prefix", ppx), F.col("positions"))
-            )
-        ).alias(c)
-        for (_lead, ppx), c in ppslot.items()
-    ]
-    per_doc = pruned.groupBy("doc_id").agg(*aggs)
-
-    def phrase_col(p):
-        toks = phrase_toks[p]
-        slop = p[1]
-        slots = [slot[t] for t in toks]
-        present = reduce_and([F.col(c).isNotNull() for c in slots])
-        if slop:
-            from sparkfulltextquery_spark.functions.fulltext import slop_starts_expr
-
-            starts = slop_starts_expr(
-                {t: F.col(slot[t]) for t in set(toks)}, toks, slop
-            )
-        else:
-            starts = F.filter(
-                F.col(slots[0]),
-                lambda x: reduce_and(
-                    [
-                        F.array_contains(F.col(c), x + F.lit(i))
-                        for i, c in enumerate(slots[1:], start=1)
-                    ]
-                ),
-            )
-        return present & (F.size(starts) > 0)
-
-    def near_col(a: str, b: str, k: int):
-        # same array expression as proximity_match_indexed: any |pa-pb| <= k
-        pa, pb = F.col(slot[a]), F.col(slot[b])
-        present = pa.isNotNull() & pb.isNotNull()
-        pairs = F.filter(
-            pa,
-            lambda p: F.exists(pb, lambda q: F.abs(q - p) <= F.lit(k)),
-        )
-        return present & (F.size(pairs) > 0)
-
-    def field_col(field: str, term: str):
-        # field membership straight off the gathered position array —
-        # title = first BM25F_TITLE_LEN tokens, bm25f_search's carving
-        from sparkfulltextquery_spark.functions.fulltext import field_pos_pred
-
-        arr = F.col(slot[term])
-        return arr.isNotNull() & F.exists(arr, field_pos_pred(field))
-
-    def as_col(n):
-        if isinstance(n, QL.Term):
-            return F.col(flag[n.text]) == 1
-        if isinstance(n, QL.Prefix):
-            return F.col(wflag[n.text]) == 1
-        if isinstance(n, QL.Fuzzy):
-            return F.col(zflag[(n.text, n.dist)]) == 1
-        if isinstance(n, QL.TermRange):
-            return F.col(rflag[(n.lo, n.hi)]) == 1
-        if isinstance(n, QL.Regex):
-            return F.col(xflag[n.pattern]) == 1
-        if isinstance(n, QL.Wildcard):
-            return F.col(vflag[n.pattern]) == 1
-        if isinstance(n, QL.FieldPrefix):
-            return F.col(fpxflag[(n.field, n.text)]) == 1
-        if isinstance(n, QL.FieldFuzzy):
-            return F.col(ffzflag[(n.field, n.text, n.dist)]) == 1
-        if isinstance(n, QL.FieldRange):
-            return F.col(frgflag[(n.field, n.lo, n.hi)]) == 1
-        if isinstance(n, QL.FieldWildcard):
-            return F.col(fwdflag[(n.field, n.pattern)]) == 1
-        if isinstance(n, QL.Field):
-            return field_col(n.field, n.text)
-        if isinstance(n, QL.FieldPhrase):
-            from sparkfulltextquery_spark.functions.fulltext import (
-                BM25F_TITLE_LEN,
-                exact_starts_expr,
-            )
-
-            toks = fphrase_toks[(n.field, n.text)]
-            arr_of = {t: F.col(slot[t]) for t in set(toks)}
-            present = reduce_and([arr_of[t].isNotNull() for t in set(toks)])
-            k = len(toks)
-            in_field = (
-                (lambda p: p <= F.lit(BM25F_TITLE_LEN - k))
-                if n.field == "title"
-                else (lambda p: p >= F.lit(BM25F_TITLE_LEN))
-            )
-            starts = F.filter(exact_starts_expr(arr_of, toks), in_field)
-            return present & (F.size(starts) > 0)
-        if isinstance(n, QL.PhrasePrefix):
-            from sparkfulltextquery_spark.functions.fulltext import (
-                exact_starts_expr,
-            )
-
-            toks = ppfx_toks[(n.text, n.prefix)]
-            arr_of = {t: F.col(slot[t]) for t in set(toks)}
-            present = reduce_and([arr_of[t].isNotNull() for t in set(toks)])
-            pp_arr = F.col(ppslot[(n.text, n.prefix)])
-            starts = F.filter(
-                exact_starts_expr(arr_of, toks),
-                lambda p: F.exists(
-                    pp_arr, lambda q: q == p + F.lit(len(toks))
-                ),
-            )
-            return present & (F.size(starts) > 0)
-        if isinstance(n, QL.Near):
-            return near_col(n.a, n.b, n.k)
-        if isinstance(n, QL.Phrase):
-            return phrase_col((n.text, n.slop))
-        if isinstance(n, QL.Not):
-            return ~as_col(n.child)
-        if isinstance(n, QL.And):
-            return reduce_and([as_col(c) for c in n.children])
-        out = as_col(n.children[0])
-        for c in n.children[1:]:
-            out = out | as_col(c)
-        return out
-
     return (
-        per_doc.filter(as_col(ast))
+        QL.compile_per_doc(
+            ast,
+            spark.table(f"{table_prefix}_postings"),
+            expansion,
+            universe=spark.table(f"{table_prefix}_dl").select("doc_id"),
+            aggs=[score],
+        )
         .select("doc_id", "score")
         .orderBy(F.col("score").desc(), F.col("doc_id"))
         .limit(k)
@@ -1314,67 +848,24 @@ def simple_search_indexed(
     b: float = BM25_B,
 ) -> DataFrame:
     """The simple query syntax (`+must -must_not should`,
-    querylang.parse_simple_query) served off the persisted index as ONE
-    pass: the scan prunes to every mentioned term's buckets, a single
-    doc_id aggregation computes the required/prohibited flags AND the
-    BM25 sum over the required+optional terms, a flag filter gates the
-    match, and the top-k heap bounds the result — zero joins, the same
-    plan class as search_indexed's one-pass form."""
-    from sparkfulltextquery_spark.functions.querylang import parse_simple_query
-
+    querylang.parse_simple_query) served off the persisted index by
+    querylang.compile_per_doc, as search_indexed: the scan prunes to every
+    mentioned term's buckets, a single doc_id aggregation computes the
+    term flags AND the BM25 sum over the required+optional terms, a flag
+    filter gates the match, and the top-k heap bounds the result — zero
+    joins."""
     _force_bucketed_scan(spark)
-    req, opt, proh = parse_simple_query(query)
+    req, opt, proh = QL.parse_simple_query(query)
     score_terms = sorted(set(req) | set(opt))
-    n_docs, avgdl, df_of = _df_stats_literals(spark, table_prefix, score_terms)
-    all_terms = sorted(set(req) | set(opt) | set(proh))
-    post = spark.table(f"{table_prefix}_postings").filter(
-        F.col("term").isin(all_terms)
-    )
-    idf_expr = F.lit(None).cast("double")
-    for t in score_terms:
-        idf_expr = F.when(
-            F.col("term") == t,
-            F.log(
-                F.lit(1.0)
-                + (F.lit(n_docs) - F.lit(df_of[t]) + F.lit(0.5))
-                / (F.lit(df_of[t]) + F.lit(0.5))
-            ),
-        ).otherwise(idf_expr)
-    tscore = F.when(
-        F.col("term").isin(score_terms),
-        idf_expr
-        * (F.col("tf") * (k1 + 1))
-        / (
-            F.col("tf")
-            + F.lit(k1)
-            * (F.lit(1 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-        ),
-    ).otherwise(F.lit(0.0))
-    aggs = [F.round(F.sum(tscore), 4).alias("score")]
-    aggs += [
-        F.max(F.when(F.col("term") == t, 1).otherwise(0)).alias(f"_r{i}")
-        for i, t in enumerate(req)
-    ]
-    aggs += [
-        F.max(F.when(F.col("term") == t, 1).otherwise(0)).alias(f"_o{i}")
-        for i, t in enumerate(opt)
-    ]
-    aggs += [
-        F.max(F.when(F.col("term") == t, 1).otherwise(0)).alias(f"_x{i}")
-        for i, t in enumerate(proh)
-    ]
-    per_doc = post.groupBy("doc_id").agg(*aggs)
-    if req:
-        gate = reduce_and([F.col(f"_r{i}") == 1 for i in range(len(req))])
-    else:
-        ors = [F.col(f"_o{i}") == 1 for i in range(len(opt))]
-        gate = ors[0]
-        for c in ors[1:]:
-            gate = gate | c
-    for i in range(len(proh)):
-        gate = gate & (F.col(f"_x{i}") == 0)
+    score = _bm25_sum(spark, table_prefix, score_terms, None, k1, b)
     return (
-        per_doc.filter(gate)
+        QL.compile_per_doc(
+            QL.simple_query_ast(req, opt, proh),
+            spark.table(f"{table_prefix}_postings"),
+            {},
+            aggs=[score],
+            agg_terms=score_terms,
+        )
         .select("doc_id", "score")
         .orderBy(F.col("score").desc(), F.col("doc_id"))
         .limit(k)
@@ -1412,16 +903,7 @@ def bm25f_scores_indexed(
     n_docs, _avgdl, df_of = _df_stats_literals(spark, table_prefix, q_terms)
     _n2, avgdl_of, _dff = _dismax_field_stats(spark, table_prefix, [], title_len)
 
-    idf_expr = F.lit(None).cast("double")
-    for t in q_terms:
-        idf_expr = F.when(
-            F.col("term") == t,
-            F.log(
-                F.lit(1.0)
-                + (F.lit(n_docs) - F.lit(df_of[t]) + F.lit(0.5))
-                / (F.lit(df_of[t]) + F.lit(0.5))
-            ),
-        ).otherwise(idf_expr)
+    idf_expr = _idf_case(q_terms, n_docs, df_of)
 
     def part(weight: float, tf_col, dl_col, field: str):
         # matches the inline `w * tf / (1 - b + b * dl/avgdl)` exactly;

@@ -23,12 +23,7 @@ MAX_EXPANSIONS = 1024
 def resolve_expansions(
     spark: SparkSession,
     table_prefix: str,
-    *,
-    prefixes=(),
-    fuzzies=(),
-    ranges=(),
-    regexes=(),
-    wildcards=(),
+    keys,
     max_expansions: int = MAX_EXPANSIONS,
 ) -> dict:
     """Resolve expansion atoms against the persisted TERM DICTIONARY.
@@ -36,56 +31,27 @@ def resolve_expansions(
     Every real engine rewrites multi-term queries (prefix, fuzzy, range,
     regexp, wildcard) to a disjunction of concrete vocabulary terms BEFORE
     consulting the inverted index (Lucene MultiTermQuery walks the term
-    dictionary, then reads only the matched terms' postings). Until r7
-    this engine instead OR'd the expansion predicate (StartsWith /
-    levenshtein / BETWEEN / RLIKE / LIKE) straight onto the postings
-    relation — which both defeated bucket pruning (the scan filter was no
-    longer an equality ``isin``) and evaluated the expensive predicate
-    once per POSTING row, O(total postings). At 100 TB a single ``*ark``
-    query forced a full posting scan with a per-row LIKE (VERDICT r07 #1).
+    dictionary, then reads only the matched terms' postings). Evaluating
+    the expansion predicate (StartsWith / levenshtein / BETWEEN / RLIKE /
+    LIKE) on the postings instead would defeat bucket pruning (the scan
+    filter is no longer an equality ``isin``) and cost one predicate per
+    POSTING row, O(total postings).
 
-    This resolver evaluates each atom's predicate over the doc-frequency
-    table instead — one row per distinct term, O(|vocab|), orders of
-    magnitude smaller than the postings — in two bounded passes:
+    ``keys`` is the key set from ``collect_expansion_keys``; each key's
+    ``expansion_pred`` is evaluated over the doc-frequency table — one row
+    per distinct term, O(|vocab|) — by ``resolve_expansions_over``'s two
+    bounded passes (a count pass that fails loudly when any atom matches
+    more than ``max_expansions`` terms, then the collect pass).
 
-      1. a count pass (one O(|vocab|) aggregation, n_atoms counters) that
-         fails loudly if ANY atom matches more than ``max_expansions``
-         terms, BEFORE anything is collected — so driver transfer is
-         bounded by construction, never by luck;
-      2. a collect pass gathering the matched terms per atom
-         (≤ n_atoms × max_expansions rows by the gate above).
-
-    The caller folds the concrete terms into its equality ``isin``,
-    restoring bucket pruning and an equality-only posting scan. Field
-    scoping never affects term-level matching (the field carve applies to
-    stored POSITIONS at flag time), so field-scoped atoms share their
-    plain atom's resolution.
-
-    Returns ``{('prefix', w) | ('fuzzy', (t, d)) | ('range', (lo, hi)) |
-    ('regex', pat) | ('wild', pat): sorted list of vocabulary terms}``;
-    empty dict when no expansion atoms were passed (zero extra jobs on
-    the common exact-terms path)."""
-    from sparkfulltextquery_spark.functions import querylang as QL
-
-    atoms: list = []
-    for w in sorted(set(prefixes)):
-        atoms.append((("prefix", w), F.col("term").startswith(w)))
-    for zt, zd in sorted(set(fuzzies)):
-        atoms.append(
-            (("fuzzy", (zt, zd)), F.levenshtein(F.col("term"), F.lit(zt)) <= zd)
-        )
-    for lo, hi in sorted(set(ranges)):
-        atoms.append((("range", (lo, hi)), F.col("term").between(lo, hi)))
-    for pat in sorted(set(regexes)):
-        atoms.append((("regex", pat), F.col("term").rlike(QL.Regex(pat).anchored())))
-    for pat in sorted(set(wildcards)):
-        atoms.append(
-            (("wild", pat), F.col("term").like(QL.Wildcard(pat).like_pattern()))
-        )
-    if not atoms:
+    Returns ``{key: sorted list of vocabulary terms}``; an empty dict, and
+    zero jobs, when ``keys`` is empty."""
+    if not keys:
         return {}
-    vocab = spark.table(f"{table_prefix}_df").select("term")
-    return resolve_expansions_over(vocab, atoms, max_expansions)
+    return resolve_expansions_over(
+        spark.table(f"{table_prefix}_df").select("term"),
+        [(key, expansion_pred(key)) for key in sorted(keys)],
+        max_expansions,
+    )
 
 
 def expansion_key(node):
@@ -129,35 +95,34 @@ def expansion_pred(key):
     return F.col("term").like(QL.Wildcard(arg).like_pattern())
 
 
-def collect_expansion_keys(ast) -> set:
-    """Every expansion-resolution key an AST needs: plain atoms via
-    expansion_key, field-scoped atoms folded onto their plain atom's key,
-    and phrase-prefix final-word prefixes as prefix keys."""
+def atom_expansion_key(node):
+    """expansion_key extended to every atom that reads resolved terms:
+    field-scoped atoms fold onto their plain atom's key, and a
+    phrase-prefix's final-word prefix is a prefix key. None otherwise."""
     from sparkfulltextquery_spark.functions import querylang as QL
 
-    keys: set = set()
+    key = expansion_key(node)
+    if key is not None:
+        return key
+    if isinstance(node, QL.FieldPrefix):
+        return ("prefix", node.text)
+    if isinstance(node, QL.FieldFuzzy):
+        return ("fuzzy", (node.text, node.dist))
+    if isinstance(node, QL.FieldRange):
+        return ("range", (node.lo, node.hi))
+    if isinstance(node, QL.FieldWildcard):
+        return ("wild", node.pattern)
+    if isinstance(node, QL.PhrasePrefix):
+        return ("prefix", node.prefix)
+    return None
 
-    def walk(n):
-        k = expansion_key(n)
-        if k is not None:
-            keys.add(k)
-        elif isinstance(n, QL.FieldPrefix):
-            keys.add(("prefix", n.text))
-        elif isinstance(n, QL.FieldFuzzy):
-            keys.add(("fuzzy", (n.text, n.dist)))
-        elif isinstance(n, QL.FieldRange):
-            keys.add(("range", (n.lo, n.hi)))
-        elif isinstance(n, QL.FieldWildcard):
-            keys.add(("wild", n.pattern))
-        elif isinstance(n, QL.PhrasePrefix):
-            keys.add(("prefix", n.prefix))
-        elif isinstance(n, QL.Not):
-            walk(n.child)
-        for c in getattr(n, "children", ()):
-            walk(c)
 
-    walk(ast)
-    return keys
+def collect_expansion_keys(ast) -> set:
+    """Every expansion-resolution key an AST needs (atom_expansion_key over
+    all of its atoms)."""
+    from sparkfulltextquery_spark.functions import querylang as QL
+
+    return {atom_expansion_key(n) for n in QL.atoms(ast)} - {None}
 
 
 def resolve_expansions_over(
@@ -168,8 +133,9 @@ def resolve_expansions_over(
     ``postings.select('term').distinct()`` on the inline path (the inline
     caller pays one corpus-derived pass it was already paying as a
     predicate scan; the win is the same bounded concrete-term list).
-    ``atoms`` is [(key, predicate Column)]. Same two-pass bounded
-    protocol and fail-loud cap as resolve_expansions."""
+    ``atoms`` is [(key, predicate Column)]. Two bounded passes: a count
+    pass that raises when any atom matches more than ``max_expansions``
+    terms, then a collect pass of the matched terms."""
     counts = vocab.agg(
         *[
             F.sum(F.when(pred, 1).otherwise(0)).alias(f"_c{i}")

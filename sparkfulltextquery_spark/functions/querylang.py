@@ -29,12 +29,15 @@ Scoring: plain/field/phrase words contribute document-level BM25 (boosts
 scale a term's share); prefix/fuzzy/range expansions are constant-score
 (standard multi-term-query behavior — expanded terms carry no idf).
 
-Each atom compiles to a DataFrame of matching doc_ids over the posting
-index (term → pruned posting lookup; phrase → positional equi-join); AND/OR/
-NOT compose via left-semi join / union-distinct / left-anti — exactly the
-rewrites the reference's optimizer applies to INTERSECT/UNION/EXCEPT
-(Optimizer.scala:1065/1086). Results are ranked by BM25 over the query's
-positive terms.
+One compiler (compile_per_doc) serves inline and indexed search alike:
+every atom reduces to concrete vocabulary terms, one posting scan feeds
+one per-doc aggregation of atom flags and position arrays, and the
+boolean tree becomes a filter over those columns. Pure negation joins
+the per-doc rows onto the doc universe. compile_matches — one relation
+per atom, composed by semi/anti joins and unions (the INTERSECT/UNION/
+EXCEPT rewrites of the reference's optimizer, Optimizer.scala:1065/1086)
+— is the independent reference the tests check the compiler against.
+Results are ranked by BM25 over the query's positive terms.
 
 This is the composition layer the reference fork existed to enable
 ("full-text query within the Spark framework") — tokenize → index → boolean
@@ -43,18 +46,33 @@ retrieval → relevance ranking, all as one Catalyst plan.
 
 from __future__ import annotations
 
+import operator
 import re
-from dataclasses import dataclass
+from dataclasses import astuple, dataclass, replace
+from functools import reduce
+from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sparkfulltextquery_spark.functions.fulltext import (
     _py_tokenize,
     bm25_scores,
-    phrase_match,
+    exact_starts_expr,
+    field_pos_pred,
+    field_start_pred,
     postings,
+    reduce_and,
+    slop_starts_expr,
 )
+from sparkfulltextquery_spark.functions.index_expand import (
+    MAX_EXPANSIONS,
+    atom_expansion_key,
+    collect_expansion_keys,
+    expansion_pred,
+    resolve_expansions_over,
+)
+from sparkfulltextquery_spark.functions.text import tokenize
 
 
 # ---------------- AST ----------------
@@ -637,20 +655,19 @@ def compile_matches(
     field_fn=None, fphrase_fn=None, fprefix_fn=None, ffuzzy_fn=None,
     frange_fn=None, fwild_fn=None, ppfx_fn=None, term_resolver=None,
 ) -> DataFrame:
-    """Compile an AST node to a distinct (doc_id) DataFrame.
+    """Compile an AST node to a distinct (doc_id) DataFrame — the
+    join-based reference the tests check compile_per_doc against; no
+    search entry point runs it.
 
-    ``post`` is any (term, doc_id, …) posting relation — inline or the
-    persisted bucketed table (then term filters become bucket-pruned scans);
-    ``phrase_fn(text) -> DataFrame[doc_id]`` supplies phrase matching
-    (inline positional join or index-backed); ``field_fn(field, term) ->
-    DataFrame[doc_id]`` supplies field-scoped matching (positional);
-    ``universe`` is the doc_id domain NOT subtracts from;
-    ``term_resolver(node) -> list[str] | None`` (r8, indexed callers)
-    pre-resolves a multi-term atom (Prefix/Wildcard/TermRange/Fuzzy/Regex)
-    to concrete vocabulary terms via the persisted term dictionary, so the
-    posting filter stays an equality ``isin`` (bucket-prunable) instead of
-    a LIKE/levenshtein scan; None (the inline default) keeps the predicate
-    forms — the inline relation is corpus-derived and has no dictionary."""
+    Each atom becomes its own relation of matching doc_ids and AND/OR/NOT
+    compose via left-semi join / union-distinct / left-anti against
+    ``universe`` (the doc_id domain). ``post`` is any (term, doc_id, …)
+    posting relation; the ``*_fn`` callables supply the positional and
+    field-scoped atoms (e.g. ``phrase_fn(text, slop) -> DataFrame[doc_id]``,
+    ``field_fn(field, term)``); ``term_resolver(node) -> list[str] | None``
+    maps a plain expansion atom to resolved vocabulary terms (an equality
+    ``isin``), and None keeps its predicate form
+    (StartsWith/LIKE/BETWEEN/levenshtein/RLIKE)."""
 
     def _multiterm(nd, fallback_pred):
         ts = term_resolver(nd) if term_resolver is not None else None
@@ -762,381 +779,210 @@ def compile_matches(
     raise TypeError(f"unknown node {node!r}")
 
 
-def _collect_atoms(node) -> tuple[set, set, set]:
-    """(term texts, phrase texts, prefix texts) appearing anywhere in the
-    AST."""
-    if isinstance(node, Term):
-        return {node.text}, set(), set()
-    if isinstance(node, Prefix):
-        return set(), set(), {node.text}
-    if isinstance(node, Phrase):
-        return set(), {(node.text, node.slop)}, set()
-    if isinstance(
-        node,
-        (Near, Field, Fuzzy, TermRange, FieldPhrase, Regex, FieldPrefix,
-         FieldFuzzy, Wildcard, FieldRange, FieldWildcard, PhrasePrefix),
-    ):
-        # collected separately via the per-kind collectors below
-        return set(), set(), set()
-    if isinstance(node, Not):
-        return _collect_atoms(node.child)
-    terms: set = set()
-    phrases: set = set()
-    prefixes: set = set()
-    for c in node.children:
-        t, p, w = _collect_atoms(c)
-        terms |= t
-        phrases |= p
-        prefixes |= w
-    return terms, phrases, prefixes
-
-
-def _collect_kind(node, cls, key) -> set:
-    """Generic AST walk: every atom of type `cls` anywhere in the tree,
-    projected through `key`. One traversal serves all per-kind collectors
-    below (they differ only in the atom class and key tuple)."""
-    if isinstance(node, cls):
-        return {key(node)}
-    if isinstance(node, Not):
-        return _collect_kind(node.child, cls, key)
-    out: set = set()
-    for c in getattr(node, "children", ()):
-        out |= _collect_kind(c, cls, key)
-    return out
-
-
-def collect_nears(node) -> set:
-    """All Near atoms (a, b, k) in the AST."""
-    return _collect_kind(node, Near, lambda n: (n.a, n.b, n.k))
-
-
-def collect_fields(node) -> set:
-    """All Field atoms (field, term) in the AST."""
-    return _collect_kind(node, Field, lambda n: (n.field, n.text))
-
-
-def collect_ranges(node) -> set:
-    """All TermRange atoms (lo, hi) in the AST."""
-    return _collect_kind(node, TermRange, lambda n: (n.lo, n.hi))
-
-
-def collect_fieldphrases(node) -> set:
-    """All FieldPhrase atoms (field, text) in the AST."""
-    return _collect_kind(node, FieldPhrase, lambda n: (n.field, n.text))
-
-
-def collect_fuzzies(node) -> set:
-    """All Fuzzy atoms (term, dist) in the AST."""
-    return _collect_kind(node, Fuzzy, lambda n: (n.text, n.dist))
-
-
-def collect_regexes(node) -> set:
-    """All Regex atom patterns in the AST."""
-    return _collect_kind(node, Regex, lambda n: n.pattern)
-
-
-def collect_fieldprefixes(node) -> set:
-    """All FieldPrefix atoms (field, text) in the AST."""
-    return _collect_kind(node, FieldPrefix, lambda n: (n.field, n.text))
-
-
-def collect_fieldfuzzies(node) -> set:
-    """All FieldFuzzy atoms (field, text, dist) in the AST."""
-    return _collect_kind(node, FieldFuzzy, lambda n: (n.field, n.text, n.dist))
-
-
-def collect_wildcards(node) -> set:
-    """All Wildcard atom patterns in the AST."""
-    return _collect_kind(node, Wildcard, lambda n: n.pattern)
-
-
-def collect_fieldranges(node) -> set:
-    """All FieldRange atoms (field, lo, hi) in the AST."""
-    return _collect_kind(node, FieldRange, lambda n: (n.field, n.lo, n.hi))
-
-
-def collect_fieldwildcards(node) -> set:
-    """All FieldWildcard atoms (field, pattern) in the AST."""
-    return _collect_kind(node, FieldWildcard, lambda n: (n.field, n.pattern))
-
-
-def collect_phraseprefixes(node) -> set:
-    """All PhrasePrefix atoms (lead-words text, prefix) in the AST."""
-    return _collect_kind(node, PhrasePrefix, lambda n: (n.text, n.prefix))
-
-
 def _eval_empty(node) -> bool:
     """Truth value of the AST for a document containing NO atom at all —
     True means pure-negation semantics need the full doc universe."""
-    if isinstance(
-        node,
-        (Term, Phrase, Prefix, Near, Field, Fuzzy, TermRange, FieldPhrase,
-         Regex, FieldPrefix, FieldFuzzy, Wildcard, FieldRange, FieldWildcard,
-         PhrasePrefix),
-    ):
-        return False
     if isinstance(node, Not):
         return not _eval_empty(node.child)
     if isinstance(node, And):
         return all(_eval_empty(c) for c in node.children)
-    return any(_eval_empty(c) for c in node.children)
+    if isinstance(node, Or):
+        return any(_eval_empty(c) for c in node.children)
+    return False
 
 
-def compile_matches_flags(
-    node, post: DataFrame, phrase_fn, near_fn=None, field_fn=None,
-    fphrase_fn=None, fprefix_fn=None, ffuzzy_fn=None,
-    frange_fn=None, fwild_fn=None, ppfx_fn=None, expansion=None,
-) -> DataFrame | None:
-    """Single-pass compilation: ONE scan of the posting relation pruned to
-    every atom term (one bucket-pruned read on the persisted index), a
-    per-doc flag aggregation, one join per phrase atom, then the whole
-    boolean tree evaluated as a Column expression over the flags — instead
-    of compile_matches' one scan + semi/anti/union join per atom. The same
-    collapse Catalyst can't do across separate relations but is trivial
-    when the compiler emits flags directly.
-
-    ``expansion`` (r9, VERDICT r08 #4): a ``{(kind, arg): [terms]}`` dict
-    from ``resolve_expansions_over`` — when supplied, every expansion
-    atom's scan predicate and flag condition becomes an equality ``isin``
-    over its resolved vocabulary terms (one discipline with indexed
-    search and the percolator); when None, the predicate forms
-    (StartsWith/levenshtein/BETWEEN/RLIKE/LIKE) are kept for callers
-    without a dictionary pass.
-
-    Returns None when the AST is satisfiable by a document containing no
-    atom at all (pure negation, e.g. ``NOT x``) — those need the doc
-    universe; callers fall back to compile_matches."""
-    if _eval_empty(node):
-        return None
-
-    def _exp_cond(kind, key, fallback):
-        if expansion is None:
-            return fallback
-        ts = expansion.get((kind, key), [])
-        return F.col("term").isin(ts) if ts else F.lit(False)
-    terms, phrases, prefixes = _collect_atoms(node)
-    nears_l = sorted(collect_nears(node))
-    fields_l = sorted(collect_fields(node))
-    fuzzies_l = sorted(collect_fuzzies(node))
-    ranges_l = sorted(collect_ranges(node))
-    regexes_l = sorted(collect_regexes(node))
-    wildcards_l = sorted(collect_wildcards(node))
-    fphrases_l = sorted(collect_fieldphrases(node))
-    fprefixes_l = sorted(collect_fieldprefixes(node))
-    ffuzzies_l = sorted(collect_fieldfuzzies(node))
-    franges_l = sorted(collect_fieldranges(node))
-    fwilds_l = sorted(collect_fieldwildcards(node))
-    ppfx_l = sorted(collect_phraseprefixes(node))
-    terms_l = sorted(terms)
-    phrases_l = sorted(phrases)
-    prefixes_l = sorted(prefixes)
-    flag = {t: f"_t{i}" for i, t in enumerate(terms_l)}
-    flag.update({p: f"_p{i}" for i, p in enumerate(phrases_l)})
-    wflag = {w: f"_w{i}" for i, w in enumerate(prefixes_l)}
-    nflag = {n: f"_n{i}" for i, n in enumerate(nears_l)}
-    gflag = {f: f"_g{i}" for i, f in enumerate(fields_l)}
-    zflag = {z: f"_z{i}" for i, z in enumerate(fuzzies_l)}
-    rflag = {r: f"_r{i}" for i, r in enumerate(ranges_l)}
-    xflag = {x: f"_x{i}" for i, x in enumerate(regexes_l)}
-    vflag = {v: f"_v{i}" for i, v in enumerate(wildcards_l)}
-    fpflag = {f: f"_fp{i}" for i, f in enumerate(fphrases_l)}
-    fpxflag = {f: f"_fx{i}" for i, f in enumerate(fprefixes_l)}
-    ffzflag = {f: f"_fz{i}" for i, f in enumerate(ffuzzies_l)}
-    frgflag = {f: f"_fr{i}" for i, f in enumerate(franges_l)}
-    fwdflag = {f: f"_fw{i}" for i, f in enumerate(fwilds_l)}
-    ppxflag = {f: f"_px{i}" for i, f in enumerate(ppfx_l)}
-
-    if terms_l or prefixes_l or fuzzies_l or ranges_l or regexes_l or wildcards_l:
-        cond_w = {
-            w: _exp_cond("prefix", w, F.col("term").startswith(w))
-            for w in prefixes_l
-        }
-        cond_z = {
-            (zt, zd): _exp_cond(
-                "fuzzy", (zt, zd), F.levenshtein(F.col("term"), F.lit(zt)) <= zd
-            )
-            for zt, zd in fuzzies_l
-        }
-        cond_r = {
-            (lo, hi): _exp_cond("range", (lo, hi), F.col("term").between(lo, hi))
-            for lo, hi in ranges_l
-        }
-        cond_x = {
-            pat: _exp_cond(
-                "regex", pat, F.col("term").rlike(Regex(pat).anchored())
-            )
-            for pat in regexes_l
-        }
-        cond_v = {
-            pat: _exp_cond(
-                "wild", pat, F.col("term").like(Wildcard(pat).like_pattern())
-            )
-            for pat in wildcards_l
-        }
-        pred = F.col("term").isin(terms_l) if terms_l else F.lit(False)
-        for c in (*cond_w.values(), *cond_z.values(), *cond_r.values(),
-                  *cond_x.values(), *cond_v.values()):
-            pred = pred | c
-        flags = (
-            post.filter(pred)
-            .groupBy("doc_id")
-            .agg(
-                *[
-                    F.max(F.when(F.col("term") == t, 1).otherwise(0)).alias(flag[t])
-                    for t in terms_l
-                ],
-                *[
-                    F.max(F.when(cond_w[w], 1).otherwise(0)).alias(wflag[w])
-                    for w in prefixes_l
-                ],
-                *[
-                    F.max(F.when(cond_z[z], 1).otherwise(0)).alias(zflag[z])
-                    for z in fuzzies_l
-                ],
-                *[
-                    F.max(F.when(cond_r[r], 1).otherwise(0)).alias(rflag[r])
-                    for r in ranges_l
-                ],
-                *[
-                    F.max(F.when(cond_x[pat], 1).otherwise(0)).alias(xflag[pat])
-                    for pat in regexes_l
-                ],
-                *[
-                    F.max(F.when(cond_v[pat], 1).otherwise(0)).alias(vflag[pat])
-                    for pat in wildcards_l
-                ],
-            )
-        )
+def atoms(node):
+    """Every atom of the AST, in tree order."""
+    if isinstance(node, Not):
+        yield from atoms(node.child)
+    elif isinstance(node, (And, Or)):
+        for c in node.children:
+            yield from atoms(c)
     else:
-        flags = None
-    for p in phrases_l:
-        pdf = (
-            phrase_fn(*p).select("doc_id").distinct().withColumn(flag[p], F.lit(1))
+        yield node
+
+
+def _atom_key(node):
+    """Boosts change ranking, never matching: atoms differing only in
+    boost share one flag."""
+    return replace(node, boost=1.0) if hasattr(node, "boost") else node
+
+
+def _isin(terms) -> Column:
+    return F.col("term").isin(terms) if terms else F.lit(False)
+
+
+def _expanded(n, expansion) -> Column:
+    return _isin(expansion.get(atom_expansion_key(n), []))
+
+
+def _expanded_in_field(n, expansion) -> Column:
+    return _expanded(n, expansion) & F.exists(
+        F.col("positions"), field_pos_pred(n.field)
+    )
+
+
+def _present(arr: dict, terms) -> Column:
+    return reduce_and([arr[t].isNotNull() for t in terms])
+
+
+def _phrase_match(n, _own, arr) -> Column:
+    toks = _py_tokenize(n.text)
+    starts = (
+        slop_starts_expr(arr, toks, n.slop) if n.slop else exact_starts_expr(arr, toks)
+    )
+    return _present(arr, toks) & (F.size(starts) > 0)
+
+
+def _field_phrase_match(n, _own, arr) -> Column:
+    toks = _py_tokenize(n.text)
+    starts = F.filter(
+        exact_starts_expr(arr, toks), field_start_pred(n.field, len(toks))
+    )
+    return _present(arr, toks) & (F.size(starts) > 0)
+
+
+def _phrase_prefix_match(n, tail, arr) -> Column:
+    toks = _py_tokenize(n.text)
+    starts = F.filter(
+        exact_starts_expr(arr, toks),
+        lambda p: F.exists(tail, lambda q: q == p + F.lit(len(toks))),
+    )
+    return _present(arr, toks) & (F.size(starts) > 0)
+
+
+def _near_match(n, _own, arr) -> Column:
+    pairs = F.filter(
+        arr[n.a],
+        lambda p: F.exists(arr[n.b], lambda q: F.abs(q - p) <= F.lit(n.k)),
+    )
+    return _present(arr, [n.a, n.b]) & (F.size(pairs) > 0)
+
+
+def _field_match(n, _own, arr) -> Column:
+    return _present(arr, [n.text]) & F.exists(arr[n.text], field_pos_pred(n.field))
+
+
+class _Kind(NamedTuple):
+    """How one atom kind compiles into the per-doc aggregation."""
+
+    agg: Callable | None  # (atom, expansion) -> the atom's own aggregate
+    slots: Callable  # atom -> exact terms whose position arrays it reads
+    match: Callable  # (atom, own aggregate, {term: position array}) -> Column
+
+
+def _flag(cond) -> _Kind:
+    """A flag atom: matched when any of the doc's posting rows meets cond."""
+    return _Kind(
+        lambda n, exp: F.max(F.when(cond(n, exp), 1).otherwise(0)),
+        lambda n: (),
+        lambda n, own, arr: own == 1,
+    )
+
+
+def _tokens(n):
+    return _py_tokenize(n.text)
+
+
+# atom class -> compilation; the order is the per-doc aggregate's column
+# order
+_KINDS = {
+    Term: _flag(lambda n, exp: F.col("term") == n.text),
+    Prefix: _flag(_expanded),
+    Fuzzy: _flag(_expanded),
+    TermRange: _flag(_expanded),
+    Regex: _flag(_expanded),
+    Wildcard: _flag(_expanded),
+    FieldPrefix: _flag(_expanded_in_field),
+    FieldFuzzy: _flag(_expanded_in_field),
+    FieldRange: _flag(_expanded_in_field),
+    FieldWildcard: _flag(_expanded_in_field),
+    PhrasePrefix: _Kind(
+        # the positions of every term the final-word prefix resolved to
+        lambda n, exp: F.flatten(
+            F.collect_list(F.when(_expanded(n, exp), F.col("positions")))
+        ),
+        _tokens,
+        _phrase_prefix_match,
+    ),
+    Phrase: _Kind(None, _tokens, _phrase_match),
+    FieldPhrase: _Kind(None, _tokens, _field_phrase_match),
+    Field: _Kind(None, lambda n: [n.text], _field_match),
+    Near: _Kind(None, lambda n: [n.a, n.b], _near_match),
+}
+_RANK = {cls: i for i, cls in enumerate(_KINDS)}
+
+
+def compile_per_doc(
+    ast, post: DataFrame, expansion: dict, universe: DataFrame | None = None,
+    aggs=(), agg_terms=(),
+) -> DataFrame:
+    """The boolean-query compiler behind every search entry point: the
+    per-doc rows (doc_id, the caller's ``aggs``, atom columns) of the
+    documents matching ``ast``.
+
+    ``post`` is a positional posting relation (term, doc_id, tf,
+    positions[, dl]) — the persisted bucketed postings or one derived
+    inline from the corpus; ``positions`` is read only by positional and
+    field-scoped atoms. ``expansion`` is the resolved ``{expansion key:
+    [terms]}`` dict, so every atom reduces to concrete terms and the scan
+    is ONE equality ``isin`` (bucket-prunable on the persisted index).
+    One groupBy(doc_id) then computes, per atom, a flag (max over the
+    posting rows meeting its condition) or the position arrays its slot
+    condition reads, next to ``aggs`` (e.g. a BM25 sum over
+    ``agg_terms``, which join the scan); the AST becomes one filter over
+    those columns.
+
+    A pure-negation AST (true for a document holding no atom) also
+    matches documents absent from the scan: the per-doc rows LEFT JOIN
+    onto ``universe`` (a doc_id relation), with flags and ``aggs`` filled
+    with 0."""
+    nodes = sorted(
+        {_atom_key(n) for n in atoms(ast)},
+        key=lambda n: (_RANK[type(n)], astuple(n)),
+    )
+    kinds = {n: _KINDS[type(n)] for n in nodes}
+    slot_terms = sorted({t for n in nodes for t in kinds[n].slots(n)})
+    scan = sorted(
+        set(slot_terms)
+        | set(agg_terms)
+        | {n.text for n in nodes if isinstance(n, Term)}
+        | {t for n in nodes for t in expansion.get(atom_expansion_key(n), [])}
+    )
+    own = {n: f"_a{i}" for i, n in enumerate(nodes) if kinds[n].agg is not None}
+    slot = {t: f"_s{i}" for i, t in enumerate(slot_terms)}
+    per_doc = (
+        post.filter(_isin(scan))
+        .groupBy("doc_id")
+        .agg(
+            *aggs,
+            *[kinds[n].agg(n, expansion).alias(c) for n, c in own.items()],
+            *[
+                F.max(F.when(F.col("term") == t, F.col("positions"))).alias(c)
+                for t, c in slot.items()
+            ],
         )
-        flags = pdf if flags is None else flags.join(pdf, "doc_id", "full_outer")
-    for n in nears_l:
-        if near_fn is None:
-            raise ValueError("NEAR atom requires a near_fn")
-        ndf = (
-            near_fn(*n).select("doc_id").distinct().withColumn(nflag[n], F.lit(1))
-        )
-        flags = ndf if flags is None else flags.join(ndf, "doc_id", "full_outer")
-    for fld in fields_l:
-        if field_fn is None:
-            raise ValueError("field atom requires a field_fn")
-        fdf = (
-            field_fn(*fld).select("doc_id").distinct().withColumn(gflag[fld], F.lit(1))
-        )
-        flags = fdf if flags is None else flags.join(fdf, "doc_id", "full_outer")
-    for fp in fphrases_l:
-        if fphrase_fn is None:
-            raise ValueError("field-phrase atom requires a fphrase_fn")
-        fdf = (
-            fphrase_fn(*fp)
-            .select("doc_id")
-            .distinct()
-            .withColumn(fpflag[fp], F.lit(1))
-        )
-        flags = fdf if flags is None else flags.join(fdf, "doc_id", "full_outer")
-    for fx in fprefixes_l:
-        if fprefix_fn is None:
-            raise ValueError("field-prefix atom requires a fprefix_fn")
-        fdf = (
-            fprefix_fn(*fx)
-            .select("doc_id")
-            .distinct()
-            .withColumn(fpxflag[fx], F.lit(1))
-        )
-        flags = fdf if flags is None else flags.join(fdf, "doc_id", "full_outer")
-    for fz in ffuzzies_l:
-        if ffuzzy_fn is None:
-            raise ValueError("field-fuzzy atom requires a ffuzzy_fn")
-        fdf = (
-            ffuzzy_fn(*fz)
-            .select("doc_id")
-            .distinct()
-            .withColumn(ffzflag[fz], F.lit(1))
-        )
-        flags = fdf if flags is None else flags.join(fdf, "doc_id", "full_outer")
-    for fr in franges_l:
-        if frange_fn is None:
-            raise ValueError("field-range atom requires a frange_fn")
-        fdf = (
-            frange_fn(*fr)
-            .select("doc_id")
-            .distinct()
-            .withColumn(frgflag[fr], F.lit(1))
-        )
-        flags = fdf if flags is None else flags.join(fdf, "doc_id", "full_outer")
-    for fw in fwilds_l:
-        if fwild_fn is None:
-            raise ValueError("field-wildcard atom requires a fwild_fn")
-        fdf = (
-            fwild_fn(*fw)
-            .select("doc_id")
-            .distinct()
-            .withColumn(fwdflag[fw], F.lit(1))
-        )
-        flags = fdf if flags is None else flags.join(fdf, "doc_id", "full_outer")
-    for pp in ppfx_l:
-        if ppfx_fn is None:
-            raise ValueError("phrase-prefix atom requires a ppfx_fn")
-        fdf = (
-            ppfx_fn(*pp)
-            .select("doc_id")
-            .distinct()
-            .withColumn(ppxflag[pp], F.lit(1))
-        )
-        flags = fdf if flags is None else flags.join(fdf, "doc_id", "full_outer")
-    assert flags is not None  # no-atom ASTs were rejected by _eval_empty
+    )
+    if _eval_empty(ast):
+        if universe is None:
+            raise ValueError("a pure-negation query needs the doc universe")
+        per_doc = universe.join(per_doc, "doc_id", "left").na.fill(0)
+    arr = {t: F.col(c) for t, c in slot.items()}
+    match = {
+        n: kinds[n].match(n, F.col(own[n]) if n in own else None, arr)
+        for n in nodes
+    }
 
     def as_col(n):
-        if isinstance(n, Term):
-            return F.coalesce(F.col(flag[n.text]), F.lit(0)) == 1
-        if isinstance(n, Prefix):
-            return F.coalesce(F.col(wflag[n.text]), F.lit(0)) == 1
-        if isinstance(n, Fuzzy):
-            return F.coalesce(F.col(zflag[(n.text, n.dist)]), F.lit(0)) == 1
-        if isinstance(n, TermRange):
-            return F.coalesce(F.col(rflag[(n.lo, n.hi)]), F.lit(0)) == 1
-        if isinstance(n, Regex):
-            return F.coalesce(F.col(xflag[n.pattern]), F.lit(0)) == 1
-        if isinstance(n, Wildcard):
-            return F.coalesce(F.col(vflag[n.pattern]), F.lit(0)) == 1
-        if isinstance(n, Field):
-            return F.coalesce(F.col(gflag[(n.field, n.text)]), F.lit(0)) == 1
-        if isinstance(n, FieldPhrase):
-            return F.coalesce(F.col(fpflag[(n.field, n.text)]), F.lit(0)) == 1
-        if isinstance(n, FieldPrefix):
-            return F.coalesce(F.col(fpxflag[(n.field, n.text)]), F.lit(0)) == 1
-        if isinstance(n, FieldFuzzy):
-            return (
-                F.coalesce(F.col(ffzflag[(n.field, n.text, n.dist)]), F.lit(0))
-                == 1
-            )
-        if isinstance(n, FieldRange):
-            return F.coalesce(F.col(frgflag[(n.field, n.lo, n.hi)]), F.lit(0)) == 1
-        if isinstance(n, FieldWildcard):
-            return F.coalesce(F.col(fwdflag[(n.field, n.pattern)]), F.lit(0)) == 1
-        if isinstance(n, PhrasePrefix):
-            return F.coalesce(F.col(ppxflag[(n.text, n.prefix)]), F.lit(0)) == 1
-        if isinstance(n, Near):
-            return F.coalesce(F.col(nflag[(n.a, n.b, n.k)]), F.lit(0)) == 1
-        if isinstance(n, Phrase):
-            return F.coalesce(F.col(flag[(n.text, n.slop)]), F.lit(0)) == 1
         if isinstance(n, Not):
             return ~as_col(n.child)
         if isinstance(n, And):
-            out = as_col(n.children[0])
-            for c in n.children[1:]:
-                out = out & as_col(c)
-            return out
-        out = as_col(n.children[0])
-        for c in n.children[1:]:
-            out = out | as_col(c)
-        return out
+            return reduce_and([as_col(c) for c in n.children])
+        if isinstance(n, Or):
+            return reduce(operator.or_, [as_col(c) for c in n.children])
+        return match[_atom_key(n)]
 
-    return flags.filter(as_col(node)).select("doc_id")
+    return per_doc.filter(as_col(ast))
 
 
 def search(
@@ -1151,205 +997,40 @@ def search(
     satisfying the boolean query, ranked by BM25 over its positive terms.
     Pure-negation queries rank by doc_id (score 0.0).
 
-    Expansion atoms (prefix/fuzzy/range/regex/wildcard, plain and
-    field-scoped, and phrase-prefix tails) resolve to concrete vocabulary
-    terms BEFORE compilation (r9, VERDICT r08 #4 — the same bounded
-    two-pass dictionary protocol as indexed search, here over the
-    corpus-derived distinct-term relation), so every posting filter in
-    the compiled plan is an equality ``isin`` and the fail-loud
-    ``max_expansions`` cap holds inline too. ONE resolution discipline
-    across inline, indexed, and percolator paths. A query with expansion
-    atoms therefore runs two bounded driver-side jobs at call time (count
-    pass + collect pass), exactly like search_indexed."""
-    from sparkfulltextquery_spark.functions.index_expand import (
-        MAX_EXPANSIONS,
-        collect_expansion_keys,
-        expansion_key,
-        expansion_pred,
-        resolve_expansions_over,
-    )
-
+    The corpus is tokenized once, staged behind a lazy localCheckpoint,
+    into a positional posting relation; expansion atoms resolve against
+    its vocabulary (bounded count + collect jobs at call time, failing
+    loudly past ``max_expansions``); compile_per_doc — the compiler
+    search_indexed runs over the persisted index — selects the matching
+    docs, universe-joined onto the docs' ids for pure negation; a
+    bm25_scores join over the same postings ranks them."""
     ast = parse_query(query)
-
-    def _exp_isin(kind, key):
-        # late-bound: `expansion` is resolved below, before any closure
-        # using this helper is invoked by the compiler
-        ts = expansion.get((kind, key), [])
-        return F.col("term").isin(ts) if ts else F.lit(False)
-
-    def _needs_positions(node) -> bool:
-        if isinstance(
-            node,
-            (Phrase, Near, Field, FieldPhrase, FieldPrefix, FieldFuzzy,
-             FieldRange, FieldWildcard, PhrasePrefix),
-        ):
-            return True  # all of these need the positional relation
-        return any(_needs_positions(c) for c in getattr(node, "children", ())) or (
-            isinstance(node, Not) and _needs_positions(node.child)
+    # the lazy barrier keeps the flag aggregation and the BM25 relations
+    # (qpost, dl) from each re-running the tokenize regex over the corpus
+    toks = docs.select(
+        F.col(id_col).alias("doc_id"), tokenize(F.col(text_col)).alias("_toks")
+    ).localCheckpoint(eager=False)
+    post = (
+        toks.select("doc_id", F.posexplode("_toks").alias("pos", "term"))
+        .groupBy("term", "doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("tf"),
+            F.collect_list("pos").alias("positions"),
         )
-
-    if _needs_positions(ast):
-        # one corpus tokenization feeds BOTH the posting table (groupBy)
-        # and every phrase/near/field atom's positional lookups
-        from sparkfulltextquery_spark.functions.fulltext import (
-            field_pos_pred,
-            proximity_match,
-        )
-
-        from sparkfulltextquery_spark.functions.fulltext import sloppy_phrase_match
-        from sparkfulltextquery_spark.functions.text import tokenize
-
-        # r13 (VERDICT r12 #7): the tokenized corpus is STAGED once behind a
-        # lazy localCheckpoint barrier — the flags aggregation, every
-        # phrase/near/field atom's positional lookup, and the BM25 scoring
-        # relations (qpost, dl) are all separate consumers that Catalyst
-        # would otherwise inline as 10+ independent parquet scans, each
-        # re-running the tokenize regex per row (the measured wall of the
-        # inline row). One row per doc with its token array crosses the
-        # barrier; per-consumer term filters apply above it. Lazy: no job
-        # at construction, rebuilt inside every timed run (the BPE/
-        # pagerank/semdedup discipline). The indexed path is unaffected.
-        toks_staged = docs.select(
-            F.col(id_col).alias("doc_id"), tokenize(F.col(text_col)).alias("_toks")
-        ).localCheckpoint(eager=False)
-        pos_rel = toks_staged.select(
-            "doc_id", F.posexplode("_toks").alias("pos", "term")
-        )
-        post = pos_rel.groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
-
-        def phrase_fn(text, slop=0):
-            if slop:
-                return sloppy_phrase_match(
-                    docs, text, slop, id_col, text_col, pos=pos_rel
-                ).select("doc_id")
-            return phrase_match(docs, text, id_col, text_col, pos=pos_rel).select(
-                "doc_id"
-            )
-        near_fn = lambda a, b, k: proximity_match(  # noqa: E731
-            docs, a, b, k, id_col, text_col, pos=pos_rel
-        ).select("doc_id")
-
-        def fphrase_fn(field: str, text: str) -> DataFrame:
-            from sparkfulltextquery_spark.functions.fulltext import (
-                field_phrase_match,
-            )
-
-            return field_phrase_match(
-                docs, field, text, id_col, text_col, pos=pos_rel
-            ).select("doc_id")
-
-        def field_fn(field: str, term: str) -> DataFrame:
-            # title = first BM25F_TITLE_LEN tokens (0-based positions),
-            # exactly bm25f_search's field carving
-            in_field = field_pos_pred(field)(F.col("pos"))
-            return (
-                pos_rel.filter((F.col("term") == term) & in_field)
-                .select("doc_id")
-                .distinct()
-            )
-
-        def fprefix_fn(field: str, prefix: str) -> DataFrame:
-            # Prefix ∘ Field: the prefix's RESOLVED vocabulary terms
-            # (equality isin) AND the same positional carving
-            in_field = field_pos_pred(field)(F.col("pos"))
-            return (
-                pos_rel.filter(_exp_isin("prefix", prefix) & in_field)
-                .select("doc_id")
-                .distinct()
-            )
-
-        def ffuzzy_fn(field: str, text: str, dist: int) -> DataFrame:
-            # Fuzzy ∘ Field: resolved terms AND the carving
-            in_field = field_pos_pred(field)(F.col("pos"))
-            return (
-                pos_rel.filter(_exp_isin("fuzzy", (text, dist)) & in_field)
-                .select("doc_id")
-                .distinct()
-            )
-
-        def frange_fn(field: str, lo: str, hi: str) -> DataFrame:
-            # TermRange ∘ Field: resolved terms AND the carving
-            in_field = field_pos_pred(field)(F.col("pos"))
-            return (
-                pos_rel.filter(_exp_isin("range", (lo, hi)) & in_field)
-                .select("doc_id")
-                .distinct()
-            )
-
-        def fwild_fn(field: str, pattern: str) -> DataFrame:
-            # Wildcard ∘ Field: resolved terms AND the carving
-            in_field = field_pos_pred(field)(F.col("pos"))
-            return (
-                pos_rel.filter(_exp_isin("wild", pattern) & in_field)
-                .select("doc_id")
-                .distinct()
-            )
-
-        def ppfx_fn(text: str, prefix: str) -> DataFrame:
-            from sparkfulltextquery_spark.functions.fulltext import (
-                phrase_prefix_match,
-            )
-
-            return phrase_prefix_match(
-                docs, _py_tokenize(text), prefix, id_col, text_col,
-                pos=pos_rel,
-                prefix_terms=expansion.get(("prefix", prefix), []),
-            )
-    else:
-        post = postings(docs, id_col, text_col)
-        phrase_fn = lambda text, slop=0: phrase_match(  # noqa: E731
-            docs, text, id_col, text_col
-        ).select("doc_id")
-        near_fn = None  # no Near atoms on this branch by construction
-        field_fn = None  # no Field atoms on this branch by construction
-        fphrase_fn = None  # no FieldPhrase atoms on this branch either
-        fprefix_fn = None  # no FieldPrefix atoms on this branch either
-        ffuzzy_fn = None  # no FieldFuzzy atoms on this branch either
-        frange_fn = None  # no FieldRange atoms on this branch either
-        fwild_fn = None  # no FieldWildcard atoms on this branch either
-        ppfx_fn = None  # no PhrasePrefix atoms on this branch either
-
-    # resolve every expansion atom against the corpus vocabulary ONCE —
-    # the closures above and the flag compiler below consume the resolved
-    # equality term lists; no LIKE/levenshtein/RLIKE/StartsWith ever
-    # reaches the posting or positional relation
-    exp_keys = collect_expansion_keys(ast)
+    )
+    keys = collect_expansion_keys(ast)
     expansion = (
         resolve_expansions_over(
             post.select("term").distinct(),
-            [(key, expansion_pred(key)) for key in sorted(exp_keys)],
+            [(key, expansion_pred(key)) for key in sorted(keys)],
             max_expansions if max_expansions is not None else MAX_EXPANSIONS,
         )
-        if exp_keys
+        if keys
         else {}
     )
-
-    def term_resolver(node):
-        key = expansion_key(node)
-        return None if key is None else expansion.get(key, [])
-
-    matched = compile_matches_flags(
-        ast, post, phrase_fn=phrase_fn, near_fn=near_fn, field_fn=field_fn,
-        fphrase_fn=fphrase_fn, fprefix_fn=fprefix_fn, ffuzzy_fn=ffuzzy_fn,
-        frange_fn=frange_fn, fwild_fn=fwild_fn, ppfx_fn=ppfx_fn,
-        expansion=expansion or None,
-    )
-    if matched is None:  # pure negation needs the doc universe
-        matched = compile_matches(
-            ast,
-            post,
-            phrase_fn=phrase_fn,
-            universe=docs.select(F.col(id_col).alias("doc_id")),
-            near_fn=near_fn,
-            field_fn=field_fn,
-            fphrase_fn=fphrase_fn,
-            fprefix_fn=fprefix_fn,
-            ffuzzy_fn=ffuzzy_fn,
-            frange_fn=frange_fn,
-            fwild_fn=fwild_fn,
-            ppfx_fn=ppfx_fn,
-            term_resolver=term_resolver if expansion else None,
-        )
+    matched = compile_per_doc(
+        ast, post, expansion, universe=docs.select(F.col(id_col).alias("doc_id"))
+    ).select("doc_id")
     pos = sorted(set(positive_terms(ast)))
     if not pos:
         return (
@@ -1409,6 +1090,13 @@ def parse_simple_query(q: str) -> tuple[list[str], list[str], list[str]]:
     return sorted(set(req)), sorted(set(opt)), sorted(set(proh))
 
 
+def simple_query_ast(req: list[str], opt: list[str], proh: list[str]):
+    """The boolean AST gating a simple query's matches: every `+` term
+    (or, with none, any bare term) and no `-` term."""
+    gate = And(tuple(Term(t) for t in req)) if req else Or(tuple(Term(t) for t in opt))
+    return And((gate,) + tuple(Not(Term(p)) for p in proh)) if proh else gate
+
+
 def simple_search(
     docs: DataFrame,
     query: str,
@@ -1424,18 +1112,13 @@ def simple_search(
     scoring set is exactly its positive atoms)."""
     req, opt, proh = parse_simple_query(query)
     post = postings(docs, id_col, text_col)
-    if req:
-        gate = And(tuple(Term(t) for t in req))
-    else:
-        gate = Or(tuple(Term(t) for t in opt))
-    ast = (
-        And((gate,) + tuple(Not(Term(p)) for p in proh)) if proh else gate
+    matched = compile_per_doc(simple_query_ast(req, opt, proh), post, {})
+    scored = bm25_scores(
+        docs, " ".join(sorted(set(req) | set(opt))), id_col, text_col, post=post
     )
-    matched = compile_matches_flags(ast, post, phrase_fn=None)
-    score_terms = sorted(set(req) | set(opt))
-    scored = bm25_scores(docs, " ".join(score_terms), id_col, text_col, post=post)
     return (
-        matched.join(scored, "doc_id", "left")
+        matched.select("doc_id")
+        .join(scored, "doc_id", "left")
         .select("doc_id", F.coalesce(F.col("score"), F.lit(0.0)).alias("score"))
         .orderBy(F.col("score").desc(), F.col("doc_id"))
         .limit(k)

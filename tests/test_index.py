@@ -3,6 +3,8 @@ search) and scale shape (bucket pruning on term lookups)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -91,17 +93,41 @@ def test_indexed_querylang_equals_inline(spark, index_tables):
 
 
 def test_indexed_querylang_plan_never_scans_corpus(spark, index_tables):
-    from sparkfulltextquery_spark.functions.index import search_indexed
+    from sparkfulltextquery_spark.functions.index import (
+        search_indexed,
+        simple_search_indexed,
+    )
 
     plan = physical_plan(search_indexed(spark, BOOL_QUERY, k=10, table_prefix="t_idx"))
     assert "documents" not in plan, plan
     assert "posexplode" not in plan.lower(), plan
-    # r04 one-pass shape: boolean matching + phrase positions + BM25 fold
+    # one-pass shape: boolean matching + phrase positions + BM25 fold
     # into ONE bucket-pruned scan and ONE aggregation — no joins at all,
     # and the top-k is a heap, not a global sort
     assert "SelectedBucketsCount" in plan, plan
     assert "Join" not in plan, plan
     assert "TakeOrderedAndProject" in plan, plan
+    # the benchmark's boolean query shapes, and the simple query syntax:
+    # the same one-pass plan, expansion atoms resolved to equality terms
+    dfs = [
+        search_indexed(spark, q, k=10, table_prefix="t_idx")
+        for q in [
+            "spark AND join",
+            "(spark OR join) AND NOT vector",
+            '"spark join" OR batch',
+            '"spark join" AND NOT vector',
+            "spar* AND join",
+            "sparc~1 OR join",
+            "[spark TO stream] AND NOT vector",
+        ]
+    ] + [simple_search_indexed(spark, "+spark join -vector", k=10, table_prefix="t_idx")]
+    for df in dfs:
+        plan = physical_plan(df)
+        assert "Join" not in plan, plan
+        assert "SelectedBucketsCount" in plan, plan
+        assert "TakeOrderedAndProject" in plan, plan
+        for pred in ("StartsWith", "LIKE", "levenshtein"):
+            assert pred not in plan, plan
 
 
 def test_streaming_index_updates_equal_batch_build(spark, tmp_path):
@@ -523,16 +549,6 @@ def test_expansion_dictionary_matches_postings_predicate(spark, index_tables):
     the same relation, so any drift is a resolver bug)."""
     from sparkfulltextquery_spark.functions.index import resolve_expansions
 
-    exp = resolve_expansions(
-        spark,
-        "t_idx",
-        prefixes=["quer"],
-        fuzzies=[("sparc", 1)],
-        ranges=[("batch", "data")],
-        wildcards=["s?ark"],
-        regexes=["qu.ry"],
-    )
-    post = spark.table("t_idx_postings")
     from sparkfulltextquery_spark.functions.querylang import Regex, Wildcard
 
     want = {
@@ -542,6 +558,8 @@ def test_expansion_dictionary_matches_postings_predicate(spark, index_tables):
         ("wild", "s?ark"): F.col("term").like(Wildcard("s?ark").like_pattern()),
         ("regex", "qu.ry"): F.col("term").rlike(Regex("qu.ry").anchored()),
     }
+    exp = resolve_expansions(spark, "t_idx", set(want))
+    post = spark.table("t_idx_postings")
     for key, pred in want.items():
         old = sorted(
             r.term for r in post.filter(pred).select("term").distinct().collect()
@@ -566,6 +584,143 @@ def test_pure_negation_expansion_stays_equality_only(spark, index_tables):
     plan = physical_plan(df)
     assert "StartsWith" not in plan, plan
     assert "LIKE " not in plan, plan
+
+
+# one atom of every kind; each appears in three pure-negation shapes
+PURE_NEGATION_ATOMS = [
+    "spark",
+    "spark^2",
+    "spar*",
+    "s?ark",
+    "/sp.rk/",
+    "sparc~1",
+    "[spark TO stream]",
+    '"spark join"',
+    '"spark join"~2',
+    '"spark jo*"',
+    "spark NEAR/3 join",
+    "title:spark",
+    'title:"spark join"',
+    "title:spar*",
+    "title:sparc~1",
+    "title:[spark TO stream]",
+    "title:s?ark",
+]
+
+
+def test_pure_negation_parity_all_atom_kinds(spark, index_tables):
+    """Pure negation (a query a doc holding none of its atoms satisfies)
+    joins the per-doc rows onto the doc universe: for every atom kind,
+    indexed search equals inline search on (doc_id, score), its doc set
+    equals the join-based reference compile_matches, and the indexed plan
+    has exactly one join."""
+    from sparkfulltextquery_spark.functions.fulltext import (
+        field_phrase_match,
+        field_pos_pred,
+        phrase_match,
+        phrase_prefix_match,
+        positional_relation,
+        postings,
+        proximity_match,
+        sloppy_phrase_match,
+        _py_tokenize,
+    )
+    from sparkfulltextquery_spark.functions.index import search_indexed
+    from sparkfulltextquery_spark.functions.querylang import (
+        Wildcard,
+        compile_matches,
+        parse_query,
+        search,
+    )
+
+    docs = load_table(spark, SF_DIR, "documents")
+    pos_rel = positional_relation(docs)
+    post = postings(docs)
+    universe = docs.select("doc_id")
+    n_docs = universe.count()
+
+    def in_field(field, pred):
+        return (
+            pos_rel.filter(pred & field_pos_pred(field)(F.col("pos")))
+            .select("doc_id")
+            .distinct()
+        )
+
+    def phrase_fn(text, slop=0):
+        if slop:
+            return sloppy_phrase_match(docs, text, slop, pos=pos_rel).select("doc_id")
+        return phrase_match(docs, text, pos=pos_rel).select("doc_id")
+
+    fns = dict(
+        near_fn=lambda a, b, k: proximity_match(docs, a, b, k, pos=pos_rel).select(
+            "doc_id"
+        ),
+        field_fn=lambda f, t: in_field(f, F.col("term") == t),
+        fphrase_fn=lambda f, text: field_phrase_match(
+            docs, f, text, pos=pos_rel
+        ).select("doc_id"),
+        fprefix_fn=lambda f, w: in_field(f, F.col("term").startswith(w)),
+        ffuzzy_fn=lambda f, t, d: in_field(
+            f, F.levenshtein(F.col("term"), F.lit(t)) <= d
+        ),
+        frange_fn=lambda f, lo, hi: in_field(f, F.col("term").between(lo, hi)),
+        fwild_fn=lambda f, p: in_field(
+            f, F.col("term").like(Wildcard(p).like_pattern())
+        ),
+        ppfx_fn=lambda text, w: phrase_prefix_match(
+            docs, _py_tokenize(text), w, pos=pos_rel
+        ),
+    )
+    proper = 0
+    for a in PURE_NEGATION_ATOMS:
+        for q in [f"NOT {a}", f"NOT {a} OR vector", f"NOT ({a} AND join)"]:
+            df = search_indexed(spark, q, k=10**6, table_prefix="t_idx")
+            plan = physical_plan(df)  # before execution: the initial plan only
+            indexed = [(r.doc_id, r.score) for r in df.collect()]
+            inline = [(r.doc_id, r.score) for r in search(docs, q, k=10**6).collect()]
+            assert indexed == inline, q
+            want = {
+                r.doc_id
+                for r in compile_matches(
+                    parse_query(q), post, phrase_fn, universe, **fns
+                ).collect()
+            }
+            assert {d for d, _ in indexed} == want, q
+            joins = [
+                ln for ln in plan.splitlines()
+                if re.match(r"^\(\d+\) \w*(Join|CartesianProduct)", ln)
+            ]
+            assert len(joins) == 1, plan
+            proper += 0 < len(want) < n_docs
+    # the shapes are not vacuous: most select some but not all docs
+    assert proper >= 40, proper
+
+
+def test_compiled_query_cache_is_lru(spark, index_tables, monkeypatch):
+    """The compiled-plan cache is bounded: with N entries, compiling query
+    N+1 evicts the least recently used one, and a cache hit refreshes an
+    entry's recency."""
+    from collections import OrderedDict
+
+    from sparkfulltextquery_spark.functions import index as I
+
+    monkeypatch.setattr(I, "_COMPILED_QUERY_CACHE_SIZE", 3)
+    monkeypatch.setattr(I, "_COMPILED_QUERY_CACHE", OrderedDict())
+
+    def run(q):
+        return I.search_indexed(spark, q, k=5, table_prefix="t_idx")
+
+    def cached_queries():
+        return [key[2] for key in I._COMPILED_QUERY_CACHE]
+
+    first = run("spark AND join")
+    run("batch AND join")
+    run("vector AND join")
+    assert run("spark AND join") is first  # hit: now most recent
+    run("window AND join")  # evicts the LRU entry, "batch AND join"
+    assert cached_queries() == ["vector AND join", "spark AND join", "window AND join"]
+    assert run("spark AND join") is first
+    assert len(I._COMPILED_QUERY_CACHE) == 3
 
 
 @pytest.mark.heavy

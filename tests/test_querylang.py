@@ -61,6 +61,32 @@ def _token_sets(spark):
     return toks
 
 
+def _compiled_doc_ids(ast, post, universe):
+    """Doc ids compile_per_doc matches, expansion atoms resolved against
+    the posting relation's own vocabulary (as inline search does)."""
+    from sparkfulltextquery_spark.functions.index_expand import (
+        collect_expansion_keys,
+        expansion_pred,
+        resolve_expansions_over,
+    )
+    from sparkfulltextquery_spark.functions.querylang import compile_per_doc
+
+    keys = sorted(collect_expansion_keys(ast))
+    expansion = (
+        resolve_expansions_over(
+            post.select("term").distinct(), [(k, expansion_pred(k)) for k in keys]
+        )
+        if keys
+        else {}
+    )
+    return {
+        r.doc_id
+        for r in compile_per_doc(ast, post, expansion, universe)
+        .select("doc_id")
+        .collect()
+    }
+
+
 def test_search_semantics_match_set_algebra(spark):
     toks = _token_sets(spark)
     has = lambda t: {d for d, ts in toks.items() if t in ts}
@@ -95,25 +121,27 @@ def test_pure_negation_query(spark):
 
 
 def test_flag_compilation_equals_join_compilation(spark):
-    """compile_matches_flags (r04 one-pass boolean eval) must produce the
-    same doc set as the join-based compile_matches for every satisfiable
-    AST shape, and decline (None) exactly the pure-negation shapes."""
-    from sparkfulltextquery_spark.functions.fulltext import phrase_match, postings
+    """compile_per_doc (the one-pass compiler behind every search entry
+    point) must produce the same doc set as the join-based reference
+    compile_matches for every AST shape, pure negation included (there
+    the per-doc rows join onto the universe)."""
+    from sparkfulltextquery_spark.functions.fulltext import (
+        phrase_match,
+        positional_postings,
+        proximity_match,
+    )
     from sparkfulltextquery_spark.functions.querylang import (
         compile_matches,
-        compile_matches_flags,
         parse_query,
     )
 
-    from sparkfulltextquery_spark.functions.fulltext import proximity_match
-
     docs = load_table(spark, SF_DIR, "documents")
-    post = postings(docs)
+    post = positional_postings(docs)
     phrase_fn = lambda text, slop=0: phrase_match(docs, text).select("doc_id")  # noqa: E731
     near_fn = lambda a, b, k: proximity_match(docs, a, b, k).select("doc_id")  # noqa: E731
     universe = docs.select("doc_id")
 
-    satisfiable = [
+    for q in [
         "spark",
         "spark AND join",
         "spark OR join",
@@ -132,25 +160,19 @@ def test_flag_compilation_equals_join_compilation(spark):
         "spark NEAR/5 join",
         "(spark NEAR/3 join) OR batch",
         'spark NEAR/4 join AND NOT vector',
-    ]
-    for q in satisfiable:
+        # pure negation: satisfiable by a doc holding no atom at all
+        "NOT spark",
+        "NOT (spark AND join)",
+        "NOT spark OR join",
+    ]:
         ast = parse_query(q)
-        flags = compile_matches_flags(ast, post, phrase_fn, near_fn=near_fn)
-        assert flags is not None, q
         want = {
             r.doc_id
             for r in compile_matches(
                 ast, post, phrase_fn, universe, near_fn=near_fn
             ).collect()
         }
-        got = {r.doc_id for r in flags.collect()}
-        assert got == want, q
-
-    for q in ["NOT spark", "NOT (spark AND join)", "NOT spark OR join"]:
-        assert (
-            compile_matches_flags(parse_query(q), post, phrase_fn, near_fn=near_fn)
-            is None
-        ), q
+        assert _compiled_doc_ids(ast, post, universe) == want, q
 
 
 def test_parser_prefix_and_boost_shapes():
@@ -252,24 +274,22 @@ def test_parser_field_and_fuzzy_shapes():
 
 
 def test_field_fuzzy_flag_equals_join_compilation(spark):
-    """The one-pass flag compiler and the join compiler must agree on the
-    match set for every field/fuzzy AST shape (the same invariant the r4/r5
-    atoms pin in test_flag_compilation_equals_join_compilation)."""
+    """compile_per_doc and the join-based reference must agree on the
+    match set for every field/fuzzy AST shape (the same invariant as
+    test_flag_compilation_equals_join_compilation)."""
     from sparkfulltextquery_spark.functions.fulltext import (
         BM25F_TITLE_LEN,
         phrase_match,
+        positional_postings,
         positional_relation,
         proximity_match,
     )
-    from sparkfulltextquery_spark.functions.querylang import (
-        compile_matches,
-        compile_matches_flags,
-    )
+    from sparkfulltextquery_spark.functions.querylang import compile_matches
     from pyspark.sql import functions as F
 
     docs = load_table(spark, SF_DIR, "documents")
     pos_rel = positional_relation(docs)
-    post = pos_rel.groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
+    post = positional_postings(docs)
     phrase_fn = lambda text, slop=0: phrase_match(docs, text, pos=pos_rel).select("doc_id")  # noqa: E731
     near_fn = lambda a, b, k: proximity_match(docs, a, b, k, pos=pos_rel).select("doc_id")  # noqa: E731
 
@@ -295,20 +315,17 @@ def test_field_fuzzy_flag_equals_join_compilation(spark):
         "batc~1 AND NOT vector",
         'title:spark AND "batch batch"',
         "(title:spark OR sparc~1) AND join",
+        "NOT title:spark",
+        "NOT sparc~1 OR join",
     ]:
         ast = parse_query(q)
-        flags = compile_matches_flags(
-            ast, post, phrase_fn, near_fn=near_fn, field_fn=field_fn
-        )
-        assert flags is not None, q
         want = {
             r.doc_id
             for r in compile_matches(
                 ast, post, phrase_fn, universe, near_fn=near_fn, field_fn=field_fn
             ).collect()
         }
-        got = {r.doc_id for r in flags.collect()}
-        assert got == want, q
+        assert _compiled_doc_ids(ast, post, universe) == want, q
 
 
 def test_field_matches_title_positions(spark):
@@ -501,14 +518,9 @@ def test_regex_matches_naive_fullmatch(spark):
 
 
 def test_regex_flag_equals_join_compilation(spark):
-    """One-pass flag compiler vs join compiler on regex-bearing ASTs."""
-    from pyspark.sql import functions as F
-
+    """compile_per_doc vs the join-based reference on regex-bearing ASTs."""
     from sparkfulltextquery_spark.functions.fulltext import phrase_match, postings
-    from sparkfulltextquery_spark.functions.querylang import (
-        compile_matches,
-        compile_matches_flags,
-    )
+    from sparkfulltextquery_spark.functions.querylang import compile_matches
 
     docs = load_table(spark, SF_DIR, "documents")
     post = postings(docs)
@@ -519,16 +531,14 @@ def test_regex_flag_equals_join_compilation(spark):
         "/sp.rk/ OR batch",
         "/qu.r(y|ies)/ AND NOT spark",
         "(/jo.+/ OR vector) AND batch",
+        "NOT /sp.rk/",
     ]:
         ast = parse_query(q)
-        flags = compile_matches_flags(ast, post, phrase_fn)
-        assert flags is not None, q
         want = {
             r.doc_id
             for r in compile_matches(ast, post, phrase_fn, universe).collect()
         }
-        got = {r.doc_id for r in flags.collect()}
-        assert got == want, q
+        assert _compiled_doc_ids(ast, post, universe) == want, q
 
 
 def test_parser_phrase_boost_shapes():
